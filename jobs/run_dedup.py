@@ -160,7 +160,6 @@ def run(spark, args) -> str:
     fmt = write_signature_table(
         docs, args.sig_dir, n_buckets=args.buckets, signatures=rep_sigs
     )
-    handles: list = []  # operator-internal persists (verify semi output)
     if args.seen_signatures:
         # Dump-over-dump incremental mode (CCNet/FineWeb cadence):
         # this dump's kernel output just landed in --sig-dir; the
@@ -194,7 +193,7 @@ def run(spark, args) -> str:
         sh = shingles(
             docs.join(rep_ids, "doc_id").unionByName(old_matched)
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        verified = jaccard_verify_candidates(sh, cand, threshold=args.threshold, handles=handles)
+        verified = jaccard_verify_candidates(sh, cand, threshold=args.threshold)
         prior = read_table(spark, args.seen_components).select("doc_id", "rep_id")
         prior_edges = prior.where(F.col("doc_id") != F.col("rep_id")).select(
             F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
@@ -228,7 +227,7 @@ def run(spark, args) -> str:
             n_hubs=args.hubs,
         ).persist(StorageLevel.MEMORY_AND_DISK)
         sh = shingles(docs.join(rep_ids, "doc_id")).persist(StorageLevel.MEMORY_AND_DISK)
-        verified = jaccard_verify_candidates(sh, cand, threshold=args.threshold, handles=handles)
+        verified = jaccard_verify_candidates(sh, cand, threshold=args.threshold)
         comp_rep = components_from_pairs(rep_ids, verified)
         comp = (
             sigs.select("doc_id", "set_hash")
@@ -252,7 +251,7 @@ def run(spark, args) -> str:
     # mode) — both frames are already persisted, the counts are free
     n_reps = rep_ids.count()
     n_cand = cand.count()
-    for h in (cand, sh, sigs, *handles):
+    for h in (cand, sh, sigs):
         h.unpersist()
     return (
         f"signatures={fmt} docs={n_docs} reps={n_reps} cands={n_cand} "

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 import hashlib as _hashlib
 
+from json_remedy_spark.localdf import bounded_collect, local_frame
+
 SHINGLE_WORDS = 3
 MINHASH_K = 12
 LSH_BANDS = 4  # 4 bands x 3 rows
@@ -471,7 +473,7 @@ def incremental_near_dup_components(
         sh = shingles(new.unionByName(old_matched)).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    verified = jaccard_verify_candidates(sh, cand, threshold=threshold, handles=handles)
+    verified = jaccard_verify_candidates(sh, cand, threshold=threshold)
     prior = seen_components.select("doc_id", "rep_id")
     prior_edges = prior.where(F.col("doc_id") != F.col("rep_id")).select(
         F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
@@ -535,12 +537,26 @@ def jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    return (
+    return _jaccard_at_least(
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("jaccard", F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b"),
+        "doc_a", "doc_b", threshold,
+    )
+
+
+def _jaccard_at_least(stats: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """``(a, b, jaccard)`` for the rows of an ``(a, b, n_common, n_a,
+    n_b)`` frame whose exact n-gram Jaccard clears ``threshold``.  The
+    one division-and-rounding expression every verifier and route
+    shares: the counts are exact integers on every route, so the
+    scores are bit-identical wherever the counts were computed."""
+    return (
+        stats.withColumn(
+            "jaccard",
+            F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
+        )
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(a, b, "jaccard")
     )
 
 
@@ -682,7 +698,8 @@ def simhash_near_dup(
     )
 
 
-# Below this many pairs the component labeling runs as ONE driver-side
+# Up to this many pairs (the bounded_collect cap; collect_max_pairs <= 0
+# forces the loop) the component labeling runs as ONE driver-side
 # union-find over the collected edge list (~16 MB of Arrow at the cap)
 # instead of the iterative distributed loop: near-dup pair graphs are a
 # vanishing fraction of the corpus (hub-cap bounds them linearly), and
@@ -739,14 +756,11 @@ def components_from_pairs(
     # the iterative paths take ONE localCheckpoint off it below for
     # lineage truncation before releasing the cache entry (r07)
     p = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).persist()
-    # the pair graph is a vanishing fraction of the corpus — size the
-    # propagation shuffle to IT, not to spark.sql.shuffle.partitions:
-    # at 250 pairs a 64-partition loop spends ~1.5 s/round scheduling
-    # empty tasks; at 10^9 pairs this grows back to a real fan-out
-    n_pairs = p.count()
-    if algorithm == "min_label" and n_pairs <= collect_max_pairs:
+    pdf = bounded_collect(p, collect_max_pairs if algorithm == "min_label" else 0)
+    if pdf is not None:
         sizes: dict = {}
-        labels = _driver_union_find(p, n_pairs, sizes_out=sizes)
+        id_type = p.schema["u"].dataType.simpleString()
+        labels = _driver_union_find(p.sparkSession, pdf, id_type, sizes_out=sizes)
         if stats_out is not None:
             stats_out["rounds"] = 0
             stats_out["driver_union_find"] = True
@@ -759,7 +773,11 @@ def components_from_pairs(
     p_ck = p.localCheckpoint()
     p.unpersist()
     p = p_ck
-    parts = max(1, min(2048, n_pairs // 500_000 + 1))
+    # the pair graph is a vanishing fraction of the corpus — size the
+    # propagation shuffle to IT, not to spark.sql.shuffle.partitions:
+    # at 250 pairs a 64-partition loop spends ~1.5 s/round scheduling
+    # empty tasks; at 10^9 pairs this grows back to a real fan-out
+    parts = max(1, min(2048, p.count() // 500_000 + 1))
     if algorithm == "star":
         return _rejoin_singletons(
             all_ids, _star_components(p, parts, max_iters, stats_out)
@@ -817,27 +835,19 @@ def components_from_pairs(
 
 
 def _driver_union_find(
-    p: DataFrame, n_pairs: int, sizes_out: dict | None = None
+    spark, pdf: pd.DataFrame, id_type: str, sizes_out: dict | None = None
 ) -> DataFrame:
-    """Connected components of a SMALL pair graph (columns u, v;
-    caller-bounded row count) as one driver-side union-find over the
-    Arrow-collected edge list.  Union-by-min with path compression, so
-    every root is its component's minimum id — exactly the fixpoint
-    min-label propagation converges to (parity pytest-pinned).
-    Returns (doc_id, rep_id) for every node appearing in a pair.
-    ``sizes_out`` (optional dict) receives {rep_id: n_labeled_docs} —
-    the component sizes among pair-graph nodes, already exact on the
-    driver, so downstream size consumers can skip the corpus-wide
-    groupBy + join-back (every labeled component has size >= 2; docs
-    outside the graph are singletons of size 1)."""
-    import pandas as pd
-
-    spark = p.sparkSession
-    id_type = p.schema["u"].dataType.simpleString()
-    schema = f"doc_id {id_type}, rep_id {id_type}"
-    pdf = p.toPandas()
-    if pdf.empty:
-        return spark.createDataFrame([], schema)
+    """Connected components of a SMALL pair graph (the collected
+    columns u, v) as one driver-side union-find.  Union-by-min with
+    path compression, so every root is its component's minimum id —
+    exactly the fixpoint min-label propagation converges to (parity
+    pytest-pinned).  Returns (doc_id, rep_id) for every node appearing
+    in a pair.  ``sizes_out`` (optional dict) receives
+    {rep_id: n_labeled_docs} — the component sizes among pair-graph
+    nodes, already exact on the driver, so downstream size consumers
+    can skip the corpus-wide groupBy + join-back (every labeled
+    component has size >= 2; docs outside the graph are singletons of
+    size 1)."""
     parent: dict = {}
 
     def find(x):
@@ -848,7 +858,7 @@ def _driver_union_find(
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in zip(pdf["u"], pdf["v"]):
+    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -864,8 +874,7 @@ def _driver_union_find(
         from collections import Counter
 
         sizes_out.update(Counter(reps))
-    labels = pd.DataFrame({"doc_id": nodes, "rep_id": reps})
-    return spark.createDataFrame(labels, schema)
+    return local_frame(spark, zip(nodes, reps), f"doc_id {id_type}, rep_id {id_type}")
 
 
 def _rejoin_singletons(all_ids: DataFrame, labels: DataFrame) -> DataFrame:
@@ -1047,8 +1056,6 @@ def soft_dedup_weights(
         # broadcast the local size table instead of the corpus-wide
         # groupBy + join-back — same integers, two exchanges fewer,
         # and no shuffle keyed on a skewable rep_id at all (r07)
-        from json_remedy_spark.localdf import local_frame
-
         id_type = comp.schema["rep_id"].dataType.simpleString()
         sz = local_frame(
             docs.sparkSession,
@@ -1090,6 +1097,12 @@ def minhash_from_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
+# driver-route caps of jaccard_verify_candidates: candidate pairs, and
+# candidate-doc shingle rows per side (both bounded_collect caps)
+SMALL_VERIFY_COLLECT_PAIRS = 1 << 16
+SMALL_VERIFY_COLLECT_SHINGLE_ROWS = 1 << 21
+
+
 def lsh_verified_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -1123,7 +1136,7 @@ def lsh_verified_pairs(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if handles is not None:
         handles.extend([sh_all, cand])
-    return jaccard_verify_candidates(sh_all, cand, threshold, handles=handles)
+    return jaccard_verify_candidates(sh_all, cand, threshold)
 
 
 def fuzzy_decontaminate(
@@ -1132,40 +1145,34 @@ def fuzzy_decontaminate(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eval_id_col: str = "doc_id",
-    eval_text_col: str = "text",
-    broadcast_eval: bool = True,
     handles: list | None = None,
-    collect_max_pairs: int | None = None,
+    collect_max_pairs: int = SMALL_VERIFY_COLLECT_PAIRS,
 ) -> DataFrame:
     """FUZZY benchmark decontamination — the GPT-3 / Pile move: drop
     training docs that NEAR-duplicate an eval document, not only docs
     sharing one exact shingle (``corpus.decontaminate``).  Bipartite
-    minhash-LSH between corpus and eval set, then exact n-gram Jaccard
-    verified ONLY for bucket-collision candidates.  Returns
+    minhash-LSH between corpus and eval set, then the one exact
+    verifier, ``jaccard_verify_candidates(..., right_sh=eval
+    shingles)``, over the bucket-collision candidates only.  Returns
     ``(doc_id, eval_id, jaccard)`` for every pair clearing
     ``threshold`` (a gate drops ``doc_id``s appearing in any pair).
+    ``eval_docs`` carries the same ``id_col``/``text_col`` as ``docs``.
 
     Scale shape: the eval side is tiny next to the corpus, so its
-    banded signature table and its shingle table BROADCAST
-    (``broadcast_eval=False`` falls back to shuffle joins for an eval
-    set beyond executor memory).  The corpus shingle kernel runs ONCE
-    (persisted; feeds both the minhash aggregation and the verify
-    join, the ``lsh_verified_pairs`` pattern), corpus docs never
-    self-join, and the verify joins are semi-join-pruned to candidate
-    docs — candidate volume is bounded by bucket collisions against
-    the eval set, not by corpus size."""
+    banded signature table (and, in the verify, its shingle table)
+    broadcasts.  The corpus shingle kernel runs ONCE (persisted; feeds
+    both the minhash aggregation and the verify, the
+    ``lsh_verified_pairs`` pattern), corpus docs never self-join, and
+    candidate volume is bounded by bucket collisions against the eval
+    set, not by corpus size.  ``collect_max_pairs`` is the verify's
+    driver-route cap (``<= 0`` forces the distributed joins)."""
     from pyspark import StorageLevel
 
     corp_sh = shingles(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
-    eval_sh = shingles(eval_docs, eval_id_col, eval_text_col).persist(
+    eval_sh = shingles(eval_docs, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if handles is not None:
-        handles.extend([corp_sh, eval_sh])
-    eval_banded = banded_signatures(minhash_from_shingles(eval_sh))
-    if broadcast_eval:
-        eval_banded = F.broadcast(eval_banded)
+    eval_banded = F.broadcast(banded_signatures(minhash_from_shingles(eval_sh)))
     cand = (
         banded_signatures(minhash_from_shingles(corp_sh))
         .alias("c")
@@ -1177,220 +1184,135 @@ def fuzzy_decontaminate(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if handles is not None:
-        handles.append(cand)
-    # small candidate sets route to the same driver fast path as
-    # jaccard_verify_candidates (bounded Arrow collects, Python set
-    # intersections on exact integers, the SAME Spark round/division
-    # expression over a LocalTableScan — bit-identical); the
-    # distributed bipartite joins below are the >cap path
-    cap = SMALL_VERIFY_COLLECT_PAIRS if collect_max_pairs is None else collect_max_pairs
-    n_cand = cand.count()
-    if n_cand <= cap:
-        from json_remedy_spark.localdf import local_frame
-
-        spark = docs.sparkSession
-        pairs_pdf = cand.select("doc_id", "eval_id").toPandas()
-        c_ids = sorted(set(pairs_pdf["doc_id"].tolist()))
-        e_ids = sorted(set(pairs_pdf["eval_id"].tolist()))
-        lim = SMALL_VERIFY_COLLECT_SHINGLE_ROWS
-        c_pdf = (
-            corp_sh.join(
-                F.broadcast(local_frame(spark, [(int(i),) for i in c_ids], "doc_id long")),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id", "shingle")
-            .limit(lim + 1)
-            .toPandas()
-        )
-        e_pdf = (
-            eval_sh.join(
-                F.broadcast(local_frame(spark, [(int(i),) for i in e_ids], "doc_id long")),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id", "shingle")
-            .limit(lim + 1)
-            .toPandas()
-        )
-        if len(c_pdf) <= lim and len(e_pdf) <= lim:
-            c_sets: dict = {}
-            for did, s in zip(c_pdf["doc_id"].tolist(), c_pdf["shingle"].tolist()):
-                c_sets.setdefault(did, set()).add(s)
-            e_sets: dict = {}
-            for did, s in zip(e_pdf["doc_id"].tolist(), e_pdf["shingle"].tolist()):
-                e_sets.setdefault(did, set()).add(s)
-            rows = []
-            for d, e in zip(pairs_pdf["doc_id"].tolist(), pairs_pdf["eval_id"].tolist()):
-                sd = c_sets.get(d)
-                se = e_sets.get(e)
-                if not sd or not se:
-                    continue  # mirrors the inner sizes joins
-                n_common = len(sd & se)
-                if n_common == 0:
-                    continue  # mirrors the inner intersection join
-                rows.append((int(d), int(e), n_common, len(sd), len(se)))
-            stats = local_frame(
-                spark,
-                rows,
-                "doc_id long, eval_id long, n_common long, n_c long, n_e long",
-            )
-            return (
-                stats.withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common")
-                        / (F.col("n_c") + F.col("n_e") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .where(F.col("jaccard") >= threshold)
-                .select("doc_id", "eval_id", "jaccard")
-            )
-        # over the shingle-row bound: fall through to the joins
-
-    sh = corp_sh.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
-    sizes_c = sh.groupBy("doc_id").agg(F.count("*").alias("n_c"))
-    sizes_e = eval_sh.groupBy("doc_id").agg(F.count("*").alias("n_e")).select(
-        F.col("doc_id").alias("eval_id"), "n_e"
+        handles.extend([corp_sh, eval_sh, cand])
+    return jaccard_verify_candidates(
+        corp_sh, cand, threshold, collect_max_pairs=collect_max_pairs, right_sh=eval_sh
     )
-    ev_sh = eval_sh.select(F.col("doc_id").alias("eval_id"), "shingle")
-    if broadcast_eval:
-        ev_sh, sizes_e = F.broadcast(ev_sh), F.broadcast(sizes_e)
-    inter = (
-        cand.join(sh, "doc_id")
-        .join(ev_sh, ["eval_id", "shingle"])
-        .groupBy("doc_id", "eval_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        inter.join(sizes_c, "doc_id")
-        .join(sizes_e, "eval_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_c") + F.col("n_e") - F.col("n_common")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_id", "eval_id", "jaccard")
-    )
-
-
-SMALL_VERIFY_COLLECT_PAIRS = 1 << 16
-SMALL_VERIFY_COLLECT_SHINGLE_ROWS = 1 << 21
 
 
 def jaccard_verify_candidates(
-    sh_all: DataFrame, cand: DataFrame, threshold: float = 0.8,
-    handles: list | None = None,  # accepted for API symmetry; the semi
-    # output is localCheckpointed (not persisted), so nothing to hand out
+    sh: DataFrame,
+    cand: DataFrame,
+    threshold: float = 0.8,
     collect_max_pairs: int = SMALL_VERIFY_COLLECT_PAIRS,
+    right_sh: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over SUPPLIED candidate pairs from a
-    SUPPLIED exploded (doc_id, shingle) table — the verify stage of the
-    fused recipe, factored so candidates can also come from the
-    AT-REST signature table (``lsh_candidate_pairs_from_table``).
-    Callers should persist both inputs; each feeds two joins.
+    """Exact n-gram Jaccard over SUPPLIED candidate pairs from SUPPLIED
+    exploded (doc_id, shingle) tables — the one verify stage of every
+    fuzzy-dedup recipe.  Candidates may come from the fused recipe, the
+    AT-REST signature table (``lsh_candidate_pairs_from_table``) or a
+    bipartite LSH join (``fuzzy_decontaminate``).
 
-    Small candidate sets (<= ``collect_max_pairs`` pairs AND <= 2^21
-    candidate-doc shingle rows — both Arrow-collect-bounded, the
-    ``components_from_pairs`` SMALL_GRAPH_COLLECT_PAIRS precedent)
-    route to a DRIVER fast path: the bounded pair list and the
-    candidate docs' shingle rows (broadcast-semi-pruned, NO shuffle)
-    collect once, set intersections run in Python on exact integers,
-    and the jaccard itself is computed by the SAME Spark
-    ``round(n_common / (n_a + n_b - n_common), 6)`` expression over a
-    LocalTableScan of those integers — bit-identical to the join
-    form (integer counts are association-free; the division/rounding
-    expression is literally the same).  This replaces the verify
-    DAG's ~10 exchange-bounded stages (semi + sizes agg + two
-    intersection joins + two size joins) with two shuffle-free jobs —
-    per-stage fixed cost dominates these stages at bounded candidate
-    volume.  Hub-capped production graphs (candidates ~256 per doc)
-    exceed the cap at corpus scale and keep the distributed path
-    below, which is unchanged."""
-    n_cand = cand.count()
-    if n_cand <= collect_max_pairs:
-        from json_remedy_spark.localdf import local_frame
+    ``cand`` holds distinct pairs; its first two columns name the pair
+    and the output: returns ``(<left id>, <right id>, jaccard)`` for every candidate
+    whose score clears ``threshold``.  The left id reads its shingles
+    from ``sh``; the right id from ``right_sh``, or from ``sh`` when
+    ``right_sh`` is None (self-verify).  Callers should persist the
+    inputs; each feeds several joins.
 
-        spark = sh_all.sparkSession
-        pairs_pdf = cand.select("doc_a", "doc_b").toPandas()
-        ids = sorted({*pairs_pdf["doc_a"].tolist(), *pairs_pdf["doc_b"].tolist()})
-        ids_f = local_frame(spark, [(int(i),) for i in ids], "doc_id long")
-        sh_pdf = (
-            sh_all.join(F.broadcast(ids_f), "doc_id", "left_semi")
-            .select("doc_id", "shingle")
-            .limit(SMALL_VERIFY_COLLECT_SHINGLE_ROWS + 1)
-            .toPandas()
-        )
-        if len(sh_pdf) <= SMALL_VERIFY_COLLECT_SHINGLE_ROWS:
-            sets: dict = {}
-            for did, s in zip(sh_pdf["doc_id"].tolist(), sh_pdf["shingle"].tolist()):
-                sets.setdefault(did, set()).add(s)
-            rows = []
-            for a, b in zip(pairs_pdf["doc_a"].tolist(), pairs_pdf["doc_b"].tolist()):
-                sa = sets.get(a)
-                sb = sets.get(b)
-                if not sa or not sb:
-                    continue  # mirrors the inner sizes join
-                n_common = len(sa & sb)
-                if n_common == 0:
-                    continue  # mirrors the inner intersection join
-                rows.append((int(a), int(b), n_common, len(sa), len(sb)))
-            stats = local_frame(
-                spark, rows, "doc_a long, doc_b long, n_common long, n_a long, n_b long"
-            )
-            return (
-                stats.withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common")
-                        / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .where(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b", "jaccard")
-            )
-        # over the shingle-row bound: fall through to the distributed
-        # path (the aborted probe read at most the bound + 1 rows)
-    # shrink the shingle table to docs that appear in ANY candidate
-    # pair before the two intersection joins — at 10^12 docs the
-    # candidate set is a tiny fraction of the corpus and this semi-join
-    # is what keeps the verify stage from shuffling the full shingle
-    # table twice.  No distinct on the key union: a left-semi join
-    # needs no unique build keys, and the distinct was a full extra
-    # exchange.  The semi output is materialized ONCE (eager
-    # localCheckpoint) because THREE consumers read it (sizes, the
-    # a-side and the b-side of the intersection join) and Catalyst
-    # does not dedupe common subtrees — unmaterialized, the semi-join
-    # and its candidate-id scan re-ran per consumer (measured 3x the
-    # stage cost at r07).  localCheckpoint, NOT persist: the
-    # truncation is ALSO what keeps downstream plan strings bounded —
-    # a lazy persist re-embeds the whole upstream tree under each of
-    # the three consumers, and in the composed corpus job that
-    # plan-string blowup OOMed the 4g driver at generateTreeString
-    # (observed r07; the CLAUDE.md iterative-loop gotcha, same
-    # mechanism).
-    cand_docs = cand.select(F.col("doc_a").alias("doc_id")).union(
-        cand.select(F.col("doc_b").alias("doc_id"))
-    )
-    sh = sh_all.join(cand_docs, "doc_id", "left_semi").localCheckpoint()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b_sh = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    Input contract: every shingle table holds DISTINCT (doc_id,
+    shingle) rows, as ``shingles()`` produces.  The driver route checks
+    it for free (collected rows == sum of per-doc set sizes) and raises
+    ``ValueError`` when it is broken; the join route counts rows and
+    would silently inflate the scores.
+
+    Routes (the ``bounded_collect`` rule): when the candidates fit
+    ``collect_max_pairs`` and the candidate docs' shingle rows fit
+    ``SMALL_VERIFY_COLLECT_SHINGLE_ROWS`` per side, both are collected
+    (broadcast-semi-pruned, no shuffle), set intersections run on the
+    driver, and the exact integer counts go back through the SAME
+    Spark division/rounding expression over a LocalTableScan —
+    bit-identical to the join route, with no exchange.  Otherwise the
+    distributed joins run: self-verify semi-joins the shingles to the
+    union of candidate ids and localCheckpoints the result (it feeds
+    three consumers, and the truncation bounds downstream plan strings
+    — a lazy persist here OOMed the 4g driver in generateTreeString);
+    bipartite verify semi-joins the corpus side only and broadcasts
+    the eval side.  ``collect_max_pairs <= 0`` forces the joins."""
+    a, b = cand.columns[:2]
+    cand = cand.select(a, b)
+    pairs = bounded_collect(cand, collect_max_pairs)
+    if pairs is not None:
+        stats = _driver_pair_counts(sh, right_sh, pairs, cand.schema)
+        if stats is not None:
+            return _jaccard_at_least(stats, a, b, threshold)
+        # over the shingle-row cap: fall through to the joins
+    if right_sh is None:
+        ids = cand.select(F.col(a).alias("doc_id")).union(cand.select(F.col(b).alias("doc_id")))
+        left = right = sh.join(ids, "doc_id", "left_semi").localCheckpoint()
+    else:
+        left = sh.join(cand.select(F.col(a).alias("doc_id")).distinct(), "doc_id", "left_semi")
+        right = right_sh
+
+    def shingles_of(t, key):
+        return t.select(F.col("doc_id").alias(key), "shingle")
+
+    def sizes_of(t, key, n):
+        sizes = t.groupBy("doc_id").agg(F.count("*").alias("n"))
+        return sizes.select(F.col("doc_id").alias(key), F.col("n").alias(n))
+
+    r_sh, r_sizes = shingles_of(right, b), sizes_of(right, b, "n_b")
+    if right_sh is not None:
+        r_sh, r_sizes = F.broadcast(r_sh), F.broadcast(r_sizes)
     inter = (
-        cand.join(a_sh, "doc_a")
-        .join(b_sh, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
+        cand.join(shingles_of(left, a), a)
+        .join(r_sh, [b, "shingle"])
+        .groupBy(a, b)
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("jaccard", F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    return _jaccard_at_least(
+        inter.join(sizes_of(left, a, "n_a"), a).join(r_sizes, b), a, b, threshold
     )
+
+
+def _driver_pair_counts(sh, right_sh, pairs: pd.DataFrame, schema):
+    """The driver route's exact (a, b, n_common, n_a, n_b) rows for
+    the collected candidate ``pairs`` as a local frame, or None when a
+    side's shingle rows exceed the collect cap.  Pairs with an empty
+    side or no common shingle are dropped, as the inner joins drop
+    them."""
+    a, b = schema.names
+    xs, ys = pairs[a].tolist(), pairs[b].tolist()
+    left = _shingle_sets(sh, set(xs) if right_sh is not None else {*xs, *ys})
+    if left is None:
+        return None
+    right = left if right_sh is None else _shingle_sets(right_sh, set(ys))
+    if right is None:
+        return None
+    rows = []
+    for x, y in zip(xs, ys):
+        sx, sy = left.get(x), right.get(y)
+        if sx and sy:
+            n_common = len(sx & sy)
+            if n_common:
+                rows.append((x, y, n_common, len(sx), len(sy)))
+    ta, tb = (schema[c].dataType.simpleString() for c in (a, b))
+    return local_frame(
+        sh.sparkSession, rows, f"{a} {ta}, {b} {tb}, n_common long, n_a long, n_b long"
+    )
+
+
+def _shingle_sets(sh: DataFrame, ids: set):
+    """{doc_id: set of shingles} for ``ids``, or None when their rows
+    exceed ``SMALL_VERIFY_COLLECT_SHINGLE_ROWS``.  Raises ValueError
+    when ``sh`` breaks the distinct-(doc_id, shingle) contract."""
+    id_type = sh.schema["doc_id"].dataType.simpleString()
+    keys = local_frame(sh.sparkSession, [(i,) for i in sorted(ids)], f"doc_id {id_type}")
+    pdf = bounded_collect(
+        sh.join(F.broadcast(keys), "doc_id", "left_semi").select("doc_id", "shingle"),
+        SMALL_VERIFY_COLLECT_SHINGLE_ROWS,
+    )
+    if pdf is None:
+        return None
+    sets: dict = {}
+    for did, s in zip(pdf["doc_id"].tolist(), pdf["shingle"].tolist()):
+        sets.setdefault(did, set()).add(s)
+    if sum(map(len, sets.values())) != len(pdf):
+        raise ValueError(
+            "jaccard_verify_candidates: duplicate (doc_id, shingle) rows in a "
+            "shingle table; the verifier needs distinct rows, as shingles() makes"
+        )
+    return sets
 
 
 # ---- bloom-prefiltered incremental dedup ----------------------------------

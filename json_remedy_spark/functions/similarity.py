@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from json_remedy_spark.localdf import local_frame
+from json_remedy_spark.localdf import bounded_collect, local_frame
 
 
 def _np_unit(mat: np.ndarray) -> np.ndarray:
@@ -843,6 +843,11 @@ def compact_ivf_deltas(spark, out_dir: str) -> int:
     return len(delta_dirs)
 
 
+# most shortlist ids the exact rerank pushes as a literal `vec_id IN
+# (...)` list; a larger shortlist filters with a broadcast semi-join
+RERANK_ISIN_MAX_IDS = 100_000
+
+
 def ivf_topk_from_index(
     spark,
     out_dir: str,
@@ -941,19 +946,18 @@ def ivf_topk_from_index(
         shortlist = shortlist.persist()
         if handles is not None:
             handles.append(shortlist)
-        # decide the branch from a LIMITed collect so the huge-batch
-        # case never pulls the full id list to the driver only to
-        # discard it (ADVICE r6)
-        id_rows = shortlist.select("vec_id").distinct().limit(100_001).collect()
+        # route with bounded_collect, so the huge-batch case never
+        # pulls the full id list to the driver only to discard it
+        ids_df = shortlist.select("vec_id").distinct()
+        ids_pdf = bounded_collect(ids_df, RERANK_ISIN_MAX_IDS)
         fetch = rerank_from.select(F.col("vec_id").cast("long").alias("vec_id"), col)
-        if len(id_rows) <= 100_000:
+        if ids_pdf is not None:
             # pushed In(vec_id, ...) — row-group pruning at the scan
-            fetch = fetch.where(F.col("vec_id").isin([r["vec_id"] for r in id_rows]))
+            fetch = fetch.where(F.col("vec_id").isin(ids_pdf["vec_id"].tolist()))
         else:
             # huge query batches would inline too many literals into
             # the plan; a broadcast semi-join filters JVM-side instead
             # (still no Python below the join)
-            ids_df = shortlist.select("vec_id").distinct()
             fetch = fetch.join(F.broadcast(ids_df), "vec_id", "left_semi")
         src = with_unit_norm(fetch, col).select(
             "vec_id", F.col("unit").alias("v_unit")

@@ -18,6 +18,9 @@ unchanged DuckDB oracle hashes).
 
 Contract: ``rows`` must not contain None cells (the call sites here
 never do); pass an explicit DDL schema so Arrow casts deterministically.
+
+The reverse direction has one rule too: every threshold-routed driver
+fast path decides its route with ``bounded_collect``.
 """
 
 from __future__ import annotations
@@ -60,3 +63,19 @@ def local_frame(spark, rows, schema: str):
     names = schema.names if hasattr(schema, "names") else _ddl_names(schema)
     pdf = pd.DataFrame.from_records(rows, columns=names)
     return spark.createDataFrame(pdf, schema)
+
+
+def bounded_collect(df, cap: int):
+    """``df`` as a pandas frame when it holds at most ``cap`` rows,
+    else None — the one route probe of every driver fast path.
+
+    One limited collect of at most ``cap + 1`` rows: the frame itself
+    is the size probe, so there is no separate ``count()`` (a persisted
+    frame comes out of the probe fully cached, ready for the
+    distributed route).  ``cap <= 0`` means "never collect": it returns
+    None without running a job, so an empty input cannot sneak onto the
+    driver route."""
+    if cap <= 0:
+        return None
+    pdf = df.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None

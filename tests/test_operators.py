@@ -676,6 +676,43 @@ def test_ivf_pq_quantized_index(spark, tmp_path):
     assert after.count() == 2 * n_before
 
 
+def test_ivf_rerank_isin_and_semi_join_branches_agree(spark, tmp_path, monkeypatch):
+    """The exact rerank routes its shortlist ids with bounded_collect:
+    a pushed ``vec_id IN (...)`` when they fit RERANK_ISIN_MAX_IDS, a
+    broadcast semi-join otherwise.  Both branches return the same
+    rows."""
+    import numpy as np
+
+    from json_remedy_spark.functions import similarity
+
+    rng = np.random.RandomState(7)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(16)]) for i in range(300)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = str(tmp_path / "pq_idx")
+    similarity.write_ivf_index(vecs, idx, cells=4, quantize="pq", pq_m=4, pq_ksub=16)
+    queries = vecs.where(F.col("vec_id") < 3).select(F.col("vec_id").alias("q_id"), "embedding")
+
+    def run():
+        handles: list = []
+        out = similarity.ivf_topk_from_index(
+            spark, idx, queries, k=3, probes=2, rerank_from=vecs, handles=handles
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(map(tuple, out.collect()))
+        for h in handles:
+            h.unpersist()
+        return plan, rows
+
+    pushed_plan, pushed = run()
+    monkeypatch.setattr(similarity, "RERANK_ISIN_MAX_IDS", 0)
+    semi_plan, semi = run()
+    assert "LeftSemi" not in pushed_plan and " IN (" in pushed_plan, pushed_plan
+    assert "LeftSemi" in semi_plan, semi_plan
+    assert pushed == semi and len(pushed) == 9
+
+
 def test_train_quality_classifier_learns_separation(spark, tmp_path):
     """In-engine NB training: weights trained on a labeled corpus make
     the production scorer separate held-out docs of the same
@@ -1104,12 +1141,50 @@ def test_dedup_job_stored_path_matches_in_memory(spark, tmp_path):
     assert stored == mem and any(not c for _, _, c in stored)  # some dups exist
 
 
-def test_jaccard_verify_driver_fast_path_parity(spark):
+# Cap-boundary cases of the driver fast paths: a cap one below, at and
+# one above the real probed row count n, plus an empty input at cap 0
+# (cap <= 0 never collects, so it must take the distributed route too).
+CAP_CASES = ["n-1", "n", "n+1", "empty"]
+
+
+def _cap_for(case, n):
+    """(cap, expect_driver_route) for a CAP_CASES entry over n rows."""
+    if case == "empty":
+        assert n == 0
+        return 0, False
+    cap = n + {"n-1": -1, "n": 0, "n+1": 1}[case]
+    return cap, cap >= n
+
+
+def _assert_route(df, driver, rejoin=False):
+    """The driver route's plan is a LocalTableScan with no join (or,
+    with ``rejoin``, only the broadcast singleton rejoin); the
+    distributed route's plan holds no LocalTableScan at all."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if not driver:
+        assert "LocalTableScan" not in plan and "Join" in plan, plan
+    elif rejoin:
+        assert "LocalTableScan" in plan and plan.count("Join") == 1, plan
+        assert "BroadcastHashJoin" in plan, plan
+    else:
+        assert "LocalTableScan" in plan and "Join" not in plan, plan
+
+
+def _assert_same_output(got, want):
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("case", CAP_CASES)
+def test_jaccard_verify_driver_fast_path_parity(spark, case):
     """r07: the small-candidate-set driver fast path (bounded Arrow
     collect + Python set intersections + the SAME Spark round/division
     expression over a LocalTableScan) must be row- and value-identical
     to the distributed join form, including schema, the
-    no-common-shingle drop, and the threshold filter."""
+    no-common-shingle drop, and the threshold filter — at every cap
+    around the real candidate count."""
     from json_remedy_spark.functions.dedup import (
         banded_signatures,
         candidate_pairs_from_banded,
@@ -1125,19 +1200,90 @@ def test_jaccard_verify_driver_fast_path_parity(spark):
     cand = candidate_pairs_from_banded(
         banded_signatures(minhash_from_shingles(sh))
     ).persist()
-    fast_df = jaccard_verify_candidates(sh, cand, threshold=0.5)
-    slow_df = jaccard_verify_candidates(sh, cand, threshold=0.5, collect_max_pairs=0)
-    assert [f.name for f in fast_df.schema.fields] == [
-        f.name for f in slow_df.schema.fields
-    ]
-    assert [f.dataType for f in fast_df.schema.fields] == [
-        f.dataType for f in slow_df.schema.fields
-    ]
-    fast = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in fast_df.collect()}
-    slow = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in slow_df.collect()}
-    assert fast == slow and fast  # exact values incl. rounding, non-empty
+    if case == "empty":
+        cand = cand.where(F.col("doc_a") < 0)
+    cap, driver = _cap_for(case, cand.count())
+    got = jaccard_verify_candidates(sh, cand, threshold=0.5, collect_max_pairs=cap)
+    _assert_route(got, driver)
+    want = jaccard_verify_candidates(sh, cand, threshold=0.5, collect_max_pairs=0)
+    _assert_same_output(got, want)
+    assert got.count() or case == "empty"  # exact values incl. rounding
     sh.unpersist()
     cand.unpersist()
+
+
+def test_verify_driver_route_rejects_duplicate_shingle_rows(spark):
+    """The verifier's input contract is distinct (doc_id, shingle)
+    rows: one duplicated row must make the driver route raise instead
+    of scoring a different Jaccard than the join route — on the self
+    and on the bipartite (right_sh) verify."""
+    from json_remedy_spark.functions.dedup import jaccard_verify_candidates, shingles
+
+    docs = spark.createDataFrame(
+        [(1, "one two three four five six"), (2, "one two three four five seven")],
+        "doc_id long, text string",
+    )
+    sh = shingles(docs)
+    dup = sh.unionByName(sh.where("doc_id = 2").limit(1))
+    self_cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    assert jaccard_verify_candidates(sh, self_cand, threshold=0.0).count() == 1
+    with pytest.raises(ValueError, match="duplicate"):
+        jaccard_verify_candidates(dup, self_cand, threshold=0.0)
+    eval_cand = spark.createDataFrame([(1, 2)], "doc_id long, eval_id long")
+    assert jaccard_verify_candidates(sh, eval_cand, 0.0, right_sh=sh).count() == 1
+    with pytest.raises(ValueError, match="duplicate"):
+        jaccard_verify_candidates(sh, eval_cand, 0.0, right_sh=dup)
+
+
+def test_verify_shingle_row_cap_falls_through_to_joins(spark, monkeypatch):
+    """Candidates under the pair cap whose shingle rows exceed the
+    per-side row cap take the join route, with the same rows as a
+    forced join route — self and bipartite."""
+    from json_remedy_spark.functions import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "one two three four five six"), (2, "one two three four five seven")],
+        "doc_id long, text string",
+    )
+    sh = dedup.shingles(docs).persist()
+    cands = [
+        (spark.createDataFrame([(1, 2)], "doc_a long, doc_b long"), None),
+        (spark.createDataFrame([(1, 2)], "doc_id long, eval_id long"), sh),
+    ]
+    want = [dedup.jaccard_verify_candidates(sh, c, 0.0, 0, right_sh=r) for c, r in cands]
+    monkeypatch.setattr(dedup, "SMALL_VERIFY_COLLECT_SHINGLE_ROWS", 3)
+    for (c, r), w in zip(cands, want):
+        got = dedup.jaccard_verify_candidates(sh, c, 0.0, right_sh=r)
+        _assert_route(got, driver=False)
+        _assert_same_output(got, w)
+        assert got.count() == 1
+    sh.unpersist()
+
+
+def test_bounded_collect_row_cap_and_no_job_at_cap_zero(spark):
+    """bounded_collect returns every row up to the cap and None past
+    it; a cap <= 0 returns None without running any Spark job."""
+    from json_remedy_spark.localdf import bounded_collect
+
+    cap = 5
+    for n in (cap - 1, cap, cap + 1):
+        pdf = bounded_collect(spark.range(n), cap)
+        if n <= cap:
+            assert sorted(pdf["id"].tolist()) == list(range(n))
+        else:
+            assert pdf is None
+    sc = spark.sparkContext
+    group = "bounded-collect-cap0"
+    sc.setJobGroup(group, "cap <= 0 must not run a job")
+    try:
+        assert bounded_collect(spark.range(3), 0) is None
+        assert bounded_collect(spark.range(0), -1) is None
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # control: a real probe under the same group is seen
+        assert bounded_collect(spark.range(3), 3) is not None
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_soft_dedup_sizes_from_driver_labels_parity(spark):
@@ -1164,25 +1310,27 @@ def test_soft_dedup_sizes_from_driver_labels_parity(spark):
     assert any(sz == 1 for _, _, sz, _ in fast)  # singletons present
 
 
-def test_fuzzy_decontaminate_driver_fast_path_parity(spark):
+@pytest.mark.parametrize("case", CAP_CASES)
+def test_fuzzy_decontaminate_driver_fast_path_parity(spark, case):
     """r07: fuzzy_decontaminate's bounded-candidate driver fast path
     must equal the distributed bipartite join form exactly (schema,
-    values, rounding)."""
+    values, rounding) at every cap around the real candidate count."""
     from json_remedy_spark.functions.dedup import fuzzy_decontaminate
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     corp = docs.where("doc_id % 20 <> 0")
-    ev = docs.where("doc_id % 20 = 0")
-    fast_df = fuzzy_decontaminate(corp, ev, threshold=0.5)
-    slow_df = fuzzy_decontaminate(corp, ev, threshold=0.5, collect_max_pairs=0)
-    assert [(f.name, f.dataType) for f in fast_df.schema.fields] == [
-        (f.name, f.dataType) for f in slow_df.schema.fields
-    ]
-    fast = {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in fast_df.collect()}
-    slow = {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in slow_df.collect()}
-    assert fast == slow and fast  # exact values incl. rounding, non-empty
+    ev = docs.where("doc_id % 20 = 0" if case != "empty" else "doc_id < 0")
+    handles: list = []
+    want = fuzzy_decontaminate(corp, ev, threshold=0.5, handles=handles, collect_max_pairs=0)
+    cap, driver = _cap_for(case, handles[-1].count())  # the candidate pairs
+    got = fuzzy_decontaminate(corp, ev, threshold=0.5, handles=handles, collect_max_pairs=cap)
+    _assert_route(got, driver)
+    _assert_same_output(got, want)
+    assert got.count() or case == "empty"  # exact values incl. rounding
+    for h in handles:
+        h.unpersist()
 
 
 def test_components_transitive_closure(spark):
@@ -1216,10 +1364,12 @@ def test_components_long_chain_converges(spark):
     assert all(r["rep_id"] == 0 for r in rows) and len(rows) == n
 
 
-def test_components_driver_fast_path_parity_and_routing(spark):
+@pytest.mark.parametrize("case", CAP_CASES)
+def test_components_driver_fast_path_parity_and_routing(spark, case):
     """r07: small pair graphs label via ONE driver union-find; output
     must equal the distributed min-label loop exactly, the stats hook
-    must say which path ran, and collect_max_pairs must route."""
+    must say which path ran, and collect_max_pairs must route at the
+    cap boundary."""
     import random
 
     from json_remedy_spark.functions.dedup import components_from_pairs
@@ -1230,20 +1380,19 @@ def test_components_driver_fast_path_parity_and_routing(spark):
     edges = [(a, b) for a, b in edges if a != b]
     ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    if case == "empty":
+        pairs, edges = pairs.where(F.col("doc_a") < 0), []
+    cap, driver = _cap_for(case, len(edges))
 
-    fast_stats, loop_stats = {}, {}
-    fast = sorted(
-        tuple(r)
-        for r in components_from_pairs(ids, pairs, stats_out=fast_stats).collect()
-    )
-    loop = sorted(
-        tuple(r)
-        for r in components_from_pairs(
-            ids, pairs, stats_out=loop_stats, collect_max_pairs=0
-        ).collect()
-    )
-    assert fast == loop
-    assert fast_stats.get("driver_union_find") and fast_stats["rounds"] == 0
+    stats, loop_stats = {}, {}
+    got = components_from_pairs(ids, pairs, stats_out=stats, collect_max_pairs=cap)
+    _assert_route(got, driver, rejoin=True)
+    want = components_from_pairs(ids, pairs, stats_out=loop_stats, collect_max_pairs=0)
+    _assert_same_output(got, want)
+    if driver:
+        assert stats.get("driver_union_find") and stats["rounds"] == 0
+    else:
+        assert "driver_union_find" not in stats and stats["rounds"] >= 1
     assert "driver_union_find" not in loop_stats and loop_stats["rounds"] >= 1
 
 
