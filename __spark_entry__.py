@@ -506,7 +506,11 @@ def q_soft_dedup_weights(spark, sf_dir):
 def q_dedup_cluster_sizes(spark, sf_dir):
     """Cluster-size histogram of the near-dup components — the
     corpus-health metric an operator reads first (how much of the
-    crawl is duplicated, and how big the blobs are)."""
+    crawl is duplicated, and how big the blobs are).
+
+    Input contract: ``doc_id`` is unique in ``documents``.  The driver
+    route counts singletons as docs minus labeled-cluster members and
+    raises ValueError when that goes negative (a broken contract)."""
     d = _t(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
     stats: dict = {}
     comp = dedup.near_dup_components(d, threshold=0.5, stats_out=stats)
@@ -519,6 +523,11 @@ def q_dedup_cluster_sizes(spark, sf_dir):
 
         hist = Counter(stats["label_sizes"].values())
         n_singletons = d.count() - sum(stats["label_sizes"].values())
+        if n_singletons < 0:
+            raise ValueError(
+                f"dedup_cluster_sizes: labeled clusters hold {-n_singletons} "
+                "more docs than the input has; doc_id must be unique"
+            )
         if n_singletons > 0:
             hist[1] += n_singletons
         return local_frame(

@@ -15,4 +15,7 @@ Re-expresses the capabilities of the reference library
 * ``streaming``  — Structured Streaming wrapper (stateless repair stream).
 """
 
+from ._zipimport import install as _install_zipimport_guard
+
 __version__ = "0.1.0"
+_install_zipimport_guard()

@@ -68,11 +68,6 @@ def has_stopword(text: Column) -> Column:
     return F.regexp_count(text, F.lit(STOPWORD_PATTERN)) > 0
 
 
-def distinct_word_ratio(text: Column) -> Column:
-    w = words(text)
-    return F.size(F.array_distinct(w)) / F.greatest(F.size(w), F.lit(1))
-
-
 BULLET_LINE_PATTERN = r"(?m)^[ \t]*[-*•]"
 ELLIPSIS_LINE_PATTERN = r"(?m)(\.\.\.|…)[ \t]*$"
 MAX_BULLET_LINE_RATIO = 0.90  # Gopher App. A

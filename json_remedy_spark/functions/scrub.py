@@ -32,14 +32,6 @@ def scrub(text: Column) -> Column:
     return out
 
 
-def pii_hits(text: Column) -> Column:
-    """Map of rule -> hit count, for the metrics table."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(n) for n, _, _ in SCRUB_RULES]),
-        F.array(*[F.regexp_count(text, F.lit(p)) for _, p, _ in SCRUB_RULES]),
-    )
-
-
 def scrub_sql(col: str = "text") -> str:
     expr = col
     for _, pat, rep in SCRUB_RULES:

@@ -44,13 +44,3 @@ def perplexity_histogram(result: DataFrame, bucket: float = 1.0) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .orderBy("ppl_bucket")
     )
-
-
-def pipeline_summary(result: DataFrame) -> DataFrame:
-    return result.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.col("ok").cast("int")).alias("repair_ok"),
-        F.sum(F.col("fast_path").cast("int")).alias("fast_path"),
-        F.sum(F.col("keep").cast("int")).alias("kept"),
-        F.sum("n_repairs").alias("total_repairs"),
-    )

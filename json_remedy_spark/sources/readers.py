@@ -1,5 +1,5 @@
-"""Input readers — reference ``from_file/2`` (lib/json_remedy.ex:182)
-and bulk text ingestion re-expressed as Spark scans."""
+"""Input reader — reference ``from_file/2`` (lib/json_remedy.ex:182)
+re-expressed as a Spark scan."""
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -16,15 +16,4 @@ def from_file(spark: SparkSession, path: str) -> DataFrame:
         r["repaired"].alias("repaired"),
         r["ok"].alias("ok"),
         r["n_repairs"].alias("n_repairs"),
-    )
-
-
-def from_text_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Line-per-document corpus (repair_stream batch shape)."""
-    from ..operators.repair_udf import make_repair_udf
-
-    df = spark.read.text(path).withColumnRenamed("value", "text")
-    r = make_repair_udf()(F.col("text"))
-    return df.select("text", r["repaired"].alias("repaired"), r["ok"].alias("ok")).where(
-        F.col("ok") & (F.col("repaired") != F.lit('""'))
     )

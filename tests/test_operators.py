@@ -1310,6 +1310,25 @@ def test_soft_dedup_sizes_from_driver_labels_parity(spark):
     assert any(sz == 1 for _, _, sz, _ in fast)  # singletons present
 
 
+def test_dedup_cluster_sizes_rejects_more_members_than_docs(spark, tmp_path, monkeypatch):
+    """dedup_cluster_sizes' driver route derives singletons as docs
+    minus labeled-cluster members; labels that outnumber the docs
+    (duplicate doc_ids upstream) must raise, not drop the size-1 row."""
+    import __spark_entry__ as entry
+
+    spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+
+    def fake_components(docs, threshold=0.8, stats_out=None, **_):
+        stats_out["label_sizes"] = {1: 3, 4: 2}  # 5 members > 3 docs
+        return docs
+
+    monkeypatch.setattr(entry.dedup, "near_dup_components", fake_components)
+    with pytest.raises(ValueError, match="doc_id must be unique"):
+        entry.q_dedup_cluster_sizes(spark, str(tmp_path))
+
+
 @pytest.mark.parametrize("case", CAP_CASES)
 def test_fuzzy_decontaminate_driver_fast_path_parity(spark, case):
     """r07: fuzzy_decontaminate's bounded-candidate driver fast path
