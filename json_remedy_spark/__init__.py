@@ -12,7 +12,10 @@ Re-expresses the capabilities of the reference library
 * ``operators``  — the DataFrame pipeline: vectorized pandas-UDF repair,
   keep/drop fusion, salted repartition, checkpoint manifest, metrics.
 * ``sources``    — deterministic synthetic web-page corpus + readers.
-* ``streaming``  — Structured Streaming wrapper (stateless repair stream).
+
+The paper's stateless Stream needs no code of its own: ``quality_filter``
+keeps no cross-row state, so it runs unchanged over a
+``spark.readStream`` source.
 """
 
 from ._zipimport import install as _install_zipimport_guard

@@ -522,35 +522,6 @@ def line_dedup(
     ``(doc_id, text, n_lines, n_dropped)`` — ``text`` is the
     reassembled document.  ``sep="\\n\\n"`` gives PARAGRAPH-level
     dedup (the coarser C4-style span unit) with identical machinery."""
-    out, _ = line_dedup_incremental(docs, None, id_col, text_col, min_line_chars, sep)
-    return out
-
-
-def line_dedup_incremental(
-    docs: DataFrame,
-    seen_hashes: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_line_chars: int = 1,
-    sep: str = "\n",
-    seen_bloom: tuple | None = None,
-    handles: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """``line_dedup`` core with an optional prior state: lines whose
-    md5 appears in ``seen_hashes`` (single column ``line_hash``) are
-    dropped outright; first-occurrence winner selection then runs over
-    the remainder.  Returns ``(deduped_docs, new_hashes)`` where
-    ``new_hashes`` is the distinct hash set this input introduced —
-    the streaming micro-batch loop appends it to the at-rest store.
-    With ``seen_hashes=None`` this IS the batch operator.
-
-    ``seen_bloom=(bitmap, n_bits, n_hashes)`` (from
-    ``dedup.build_bloom`` over the store's ``line_hash``) prefilters
-    the store lookup: lines that MISS the bloom are definitely new and
-    skip the anti-join entirely (map-only); only hits join.  Blooms
-    have no false negatives, so any SUPERSET bloom (stale, or
-    including a replayed batch's own hashes) is safe — false positives
-    just take the exact-join path."""
     lines = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), _re_escape(sep))).alias("line_no", "line"),
@@ -559,46 +530,28 @@ def line_dedup_incremental(
     narrow = lines.where(eligible).select(
         F.md5(F.col("line")).alias("line_hash"), "doc_id", "line_no"
     )
-    if seen_hashes is not None:
-        store = seen_hashes.select("line_hash").distinct()
-        if seen_bloom is not None:
-            from json_remedy_spark.functions.dedup import bloom_split_anti_join
-
-            narrow = bloom_split_anti_join(
-                narrow, store, "line_hash", seen_bloom, handles
-            )
-        else:
-            narrow = narrow.join(store, "line_hash", "left_anti")
-    winners_h = narrow.groupBy("line_hash").agg(
+    winners = narrow.groupBy("line_hash").agg(
         F.min(F.struct("doc_id", "line_no")).alias("w")
-    )
-    new_hashes = winners_h.select("line_hash")
-    winners = winners_h.select(
+    ).select(
         F.col("w.doc_id").alias("doc_id"), F.col("w.line_no").alias("line_no")
     ).withColumn("is_winner", F.lit(True))
     kept = (
         lines.join(winners, ["doc_id", "line_no"], "left")
         .withColumn("keep_line", (~eligible) | F.coalesce("is_winner", F.lit(False)))
     )
-    out = (
-        kept.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("keep_line"), F.struct("line_no", "line"))
-                        )
-                    ),
-                    lambda s: s.line,
+    return kept.groupBy("doc_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.when(F.col("keep_line"), F.struct("line_no", "line")))
                 ),
-                sep,
-            ).alias("text"),
-            F.count("*").alias("n_lines"),
-            F.sum(F.when(~F.col("keep_line"), 1).otherwise(0)).alias("n_dropped"),
-        )
+                lambda s: s.line,
+            ),
+            sep,
+        ).alias("text"),
+        F.count("*").alias("n_lines"),
+        F.sum(F.when(~F.col("keep_line"), 1).otherwise(0)).alias("n_dropped"),
     )
-    return out, new_hashes
 
 
 def host_boilerplate_removal(

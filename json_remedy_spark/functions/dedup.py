@@ -1323,9 +1323,9 @@ BLOOM_HASHES = 4
 
 def bloom_positions(col, n_bits: int = BLOOM_BITS, n_hashes: int = BLOOM_HASHES):
     """THE bloom hash family: ``n_hashes`` xxhash64 variants pmod
-    n_bits, as one array column.  Single definition — build, probe,
-    batch, and streaming sides all call this; a divergent copy would
-    silently break every membership test (review r3)."""
+    n_bits, as one array column.  Single definition — the build and
+    probe sides both call this; a divergent copy would silently break
+    every membership test (review r3)."""
     return F.array(
         *[F.pmod(F.xxhash64(col, F.lit(i)), F.lit(n_bits)) for i in range(n_hashes)]
     )
@@ -1382,8 +1382,8 @@ def bloom_split_anti_join(
     bloom: tuple,
     handles: list | None = None,
 ) -> DataFrame:
-    """The miss/hit split shared by every bloom-prefiltered exact
-    lookup (batch docs, line dedup, streaming): rows that MISS the
+    """The miss/hit split of the bloom-prefiltered exact lookup
+    (``incremental_new_docs``): rows that MISS the
     bloom pass through join-free; HITS take the real left-anti join
     against ``store``.  The probed frame persists first — Catalyst
     re-executes common subtrees once per union branch otherwise; pass

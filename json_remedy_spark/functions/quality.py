@@ -89,13 +89,6 @@ def ellipsis_line_ratio(text: Column) -> Column:
     return F.regexp_count(text, F.lit(ELLIPSIS_LINE_PATTERN)) / F.greatest(n_lines(text), F.lit(1))
 
 
-def alpha_word_ratio(text: Column) -> Column:
-    """Fraction of words containing an alphabetic char (Gopher >= 0.8)."""
-    w = words(text)
-    alpha = F.filter(w, lambda x: x.rlike("[A-Za-z]"))
-    return F.size(alpha) / F.greatest(F.size(w), F.lit(1))
-
-
 def has_lorem_ipsum(text: Column) -> Column:
     """C4: any document containing the placeholder phrase drops."""
     return F.lower(text).contains("lorem ipsum")

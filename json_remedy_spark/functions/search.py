@@ -155,28 +155,17 @@ def write_postings_table(
     )
     stats = (
         postings.select("doc_id", "dl").distinct()
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("sum_dl"),
-        ).first()
+        .agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
     )
-    # sum_dl + n_buckets ride along for the streaming-delta path:
-    # merged avgdl must be recomputed as sum_dl/n over base+deltas
-    # (dl are exact integers, so the sum — and therefore the merged
-    # average — is association-independent and equals a one-shot
-    # build's avg bit-for-bit), and delta writers need the bucket
-    # count the base was hashed with
+    # n_buckets rides along so the reader hashes query terms the way
+    # the table was written
     spark = docs.sparkSession
     # Arrow-backed local frame (localdf.py): the list form costs ~5 s
     # of Python-worker round-trips per coalesce(1) write at local[32]
     local_frame(
         spark,
-        [(
-            int(stats["n"]), float(stats["avgdl"]), int(stats["sum_dl"]),
-            int(n_buckets), float(max_df_frac),
-        )],
-        "n long, avgdl double, sum_dl long, n_buckets int, max_df_frac double",
+        [(int(stats["n"]), float(stats["avgdl"]), int(n_buckets))],
+        "n long, avgdl double, n_buckets int",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
 
     df_tbl = postings.groupBy("term").agg(F.count("*").alias("df")).where(
@@ -215,37 +204,12 @@ def bm25_topk_from_postings(
     buckets driver-side (a tiny collect — |distinct query terms|
     values), the postings scan prunes to those bucket partitions, and
     the scoring math is byte-identical to ``bm25_topk`` over the same
-    corpus and parameters (pytest-pinned).
-
-    Streamed growth (``stream_postings_ingest``): when
-    ``deltas/batch=*`` directories exist they are unioned in — bucket
-    stays a partition column inside every delta, so probed-bucket
-    pruning applies to base AND delta scans; df counts merge by term
-    and corpus stats merge exactly (integer sum_dl), then the df cap
-    re-applies against the MERGED corpus size, which is precisely what
-    a one-shot build over the union would have done at write time
-    (query parity pytest-pinned).  Streamed doc_ids must be new —
-    the same disjointness contract as the IVF delta ingest."""
+    corpus and parameters (pytest-pinned)."""
     import os
 
     srow = spark.read.parquet(os.path.join(out_dir, "stats")).first()
     n_docs, avgdl = srow["n"], srow["avgdl"]
     n_buckets = srow["n_buckets"] if "n_buckets" in srow.__fields__ else n_buckets
-    deltas = os.path.join(out_dir, "deltas")
-    df_deltas = os.path.join(out_dir, "df_deltas")
-    has_deltas = os.path.isdir(deltas)
-    max_df_frac = None
-    if has_deltas:
-        sd = (
-            spark.read.option("basePath", os.path.join(out_dir, "stats_deltas"))
-            .parquet(os.path.join(out_dir, "stats_deltas"))
-            .agg(F.sum("n").alias("n"), F.sum("sum_dl").alias("sum_dl"))
-            .first()
-        )
-        sum_dl = srow["sum_dl"] + int(sd["sum_dl"] or 0)
-        n_docs = n_docs + int(sd["n"] or 0)
-        avgdl = sum_dl / n_docs  # == a one-shot build's avg (exact ints)
-        max_df_frac = srow["max_df_frac"] if "max_df_frac" in srow.__fields__ else 0.5
 
     q_terms = queries.select(
         F.col(q_id_col).alias("q_id"),
@@ -256,21 +220,6 @@ def bm25_topk_from_postings(
     df_tbl = spark.read.parquet(os.path.join(out_dir, "df")).where(
         F.col("bucket").isin(probed)
     )
-    if has_deltas:
-        ddf = (
-            spark.read.option("basePath", df_deltas)
-            .parquet(df_deltas)
-            .where(F.col("bucket").isin(probed))
-            .select("term", "df", "bucket")
-        )
-        df_tbl = (
-            df_tbl.select("term", "df", "bucket")
-            .unionByName(ddf)
-            .groupBy("term", "bucket")
-            .agg(F.sum("df").alias("df"))
-            # the write-time stopword cap, re-applied at MERGED scale
-            .where(F.col("df") <= F.lit(float(max_df_frac)) * F.lit(float(n_docs)))
-        )
     q_idf = F.broadcast(q_terms.select("q_id", "term")).join(df_tbl, "term").withColumn(
         "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     )
@@ -278,16 +227,6 @@ def bm25_topk_from_postings(
     postings = spark.read.parquet(os.path.join(out_dir, "postings")).where(
         F.col("bucket").isin(probed)  # -> PartitionFilters at the scan
     )
-    if has_deltas:
-        dpost = (
-            spark.read.option("basePath", deltas)
-            .parquet(deltas)
-            .where(F.col("bucket").isin(probed))  # pruned in deltas too
-            .select("term", "doc_id", "tf", "dl", "bucket")
-        )
-        postings = postings.select("term", "doc_id", "tf", "dl", "bucket").unionByName(
-            dpost
-        )
     hits = postings.join(
         F.broadcast(q_idf.select("q_id", "term", "idf")), "term"
     )
@@ -305,78 +244,6 @@ def bm25_topk_from_postings(
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def compact_postings_deltas(spark, out_dir: str) -> int:
-    """Fold streamed delta batches (``stream_postings_ingest``) into
-    the base postings layout and drop the delta dirs; queries are
-    equal before and after (pytest-pinned).  Unlike the IVF compaction
-    this REWRITES the base rather than appending: the df stopword cap
-    re-evaluates at the merged corpus size, and a term that crossed
-    the cap must have its base postings dropped too — after
-    compaction the table is byte-equivalent to a one-shot
-    ``write_postings_table`` over the union corpus (modulo the
-    monotone-exclusion caveat for terms the base build already
-    capped).  The rewrite goes through a versioned temp dir + rename;
-    the swap is not atomic — production routes this through a table
-    format's transactional REPLACE (Iceberg/Delta), same note as
-    ``compact_ivf_deltas``.  Returns the number of batches folded."""
-    import glob as _glob
-    import os
-    import shutil
-
-    delta_root = os.path.join(out_dir, "deltas")
-    batches = sorted(_glob.glob(os.path.join(delta_root, "batch=*")))
-    if not batches:
-        return 0
-    srow = spark.read.parquet(os.path.join(out_dir, "stats")).first()
-    n_buckets, frac = int(srow["n_buckets"]), float(srow["max_df_frac"])
-
-    sd = (
-        spark.read.option("basePath", os.path.join(out_dir, "stats_deltas"))
-        .parquet(os.path.join(out_dir, "stats_deltas"))
-        .agg(F.sum("n").alias("n"), F.sum("sum_dl").alias("sum_dl"))
-        .first()
-    )
-    n = int(srow["n"]) + int(sd["n"] or 0)
-    sum_dl = int(srow["sum_dl"]) + int(sd["sum_dl"] or 0)
-
-    cols = ["term", "doc_id", "tf", "dl", "bucket"]
-    merged = (
-        spark.read.parquet(os.path.join(out_dir, "postings")).select(*cols)
-        .unionByName(
-            spark.read.option("basePath", delta_root).parquet(delta_root).select(*cols)
-        )
-    )
-    df_merged = (
-        spark.read.parquet(os.path.join(out_dir, "df")).select("term", "df", "bucket")
-        .unionByName(
-            spark.read.option("basePath", os.path.join(out_dir, "df_deltas"))
-            .parquet(os.path.join(out_dir, "df_deltas"))
-            .select("term", "df", "bucket")
-        )
-        .groupBy("term", "bucket")
-        .agg(F.sum("df").alias("df"))
-        .where(F.col("df") <= F.lit(frac) * F.lit(float(n)))
-    )
-
-    tmp_p, tmp_d = os.path.join(out_dir, "postings_v2"), os.path.join(out_dir, "df_v2")
-    merged.join(df_merged.select("term"), "term", "left_semi").repartition(
-        F.col("bucket")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(tmp_p)
-    df_merged.select("term", "df", "bucket").write.mode("overwrite").parquet(tmp_d)
-    local_frame(
-        spark,
-        [(n, sum_dl / n, sum_dl, n_buckets, frac)],
-        "n long, avgdl double, sum_dl long, n_buckets int, max_df_frac double",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "stats_v2"))
-
-    for name in ("postings", "df", "stats"):
-        shutil.rmtree(os.path.join(out_dir, name))
-        os.rename(os.path.join(out_dir, name + "_v2"), os.path.join(out_dir, name))
-    for name in ("deltas", "df_deltas", "stats_deltas"):
-        shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
-    return len(batches)
 
 
 def bm25_sql(

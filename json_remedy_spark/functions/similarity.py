@@ -222,25 +222,6 @@ def _plane_matrix(dims: int, table: int = 0, n_planes: int = N_PLANES):
     return m
 
 
-def with_lsh_bucket(
-    df: DataFrame, col: str = "embedding", out: str = "bucket", n_planes: int = N_PLANES
-) -> DataFrame:
-    """Sign pattern over ``n_planes`` deterministic hyperplanes -> long
-    bucket, vectorized: one numpy matmul per Arrow batch."""
-
-    @pandas_udf("long")
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        planes = _plane_matrix(mat.shape[1], n_planes=n_planes)
-        signs = (mat @ planes) > 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series((signs @ weights).astype("int64"))
-
-    return df.withColumn(out, bucket_udf(F.col(col)))
-
-
 def with_lsh_tables(
     df: DataFrame, col: str = "unit", n_tables: int = N_TABLES, n_planes: int = N_PLANES
 ) -> DataFrame:
@@ -613,7 +594,6 @@ def _write_assigned_cells(
     out_dir: str,
     mode: str,
     quantize: str | None = None,
-    subdir: str = "vectors",
     books=None,
 ) -> int:
     """Assign each vector to its nearest centroid and land it in that
@@ -645,12 +625,11 @@ def _write_assigned_cells(
         )
     elif quantize is not None:
         raise ValueError(f"unknown quantize mode: {quantize!r}")
+    vectors_dir = os.path.join(out_dir, "vectors")
     assigned.repartition(F.col("cell")).write.mode(mode).partitionBy("cell").parquet(
-        os.path.join(out_dir, subdir)
+        vectors_dir
     )
-    return sum(
-        1 for d in os.listdir(os.path.join(out_dir, subdir)) if d.startswith("cell=")
-    )
+    return sum(1 for d in os.listdir(vectors_dir) if d.startswith("cell="))
 
 
 def write_ivf_index(
@@ -735,9 +714,8 @@ def write_ivf_index(
 
 
 def detect_index_quantize(spark, out_dir: str):
-    """(quantize, books) from the STORED vectors schema — the single
-    layout detector batch appends and streamed deltas share, so a new
-    quantization mode cannot silently drift between them: float has no
+    """(quantize, books) from the STORED vectors schema, so an append
+    writes the layout the index already has: float has no
     ``codes``, sq8 has ``codes`` + a per-vector ``scale``, pq has
     ``codes`` alone (its codebooks are re-read so new vectors encode
     against the exact trained tables)."""
@@ -791,56 +769,6 @@ def read_ivf_centroids(spark, out_dir: str) -> np.ndarray:
 
     rows = spark.read.parquet(os.path.join(out_dir, "centroids")).orderBy("cell").collect()
     return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-
-def read_index_vectors(spark, out_dir: str) -> DataFrame:
-    """The index's full vector set: the compacted base plus any
-    streamed delta batches (``deltas/batch=<id>/cell=*`` — written by
-    ``stream_ivf_ingest`` with per-batch overwrite, so a replayed
-    micro-batch is idempotent).  Both layouts carry ``cell`` as a
-    partition column, so a probed-cell filter prunes both scans."""
-    import glob as _glob
-    import os
-
-    base = spark.read.parquet(os.path.join(out_dir, "vectors"))
-    delta_root = os.path.join(out_dir, "deltas")
-    delta_dirs = sorted(_glob.glob(os.path.join(delta_root, "batch=*")))
-    if not delta_dirs:
-        return base
-    # basePath makes batch AND cell partition columns of one unified
-    # discovery (sibling batch=* roots otherwise conflict)
-    deltas = (
-        spark.read.option("basePath", delta_root).parquet(*delta_dirs).select(*base.columns)
-    )
-    return base.unionByName(deltas)
-
-
-def compact_ivf_deltas(spark, out_dir: str) -> int:
-    """Fold streamed delta batches into the base cell layout (one
-    file per touched cell appended) and drop the delta dirs; queries
-    are equal before and after (pytest-pinned).  The
-    append-then-delete pair is not atomic — a crash in between leaves
-    duplicates, so production routes this through a table format's
-    transactional REPLACE (Iceberg/Delta) or swaps a versioned
-    ``vectors_v<N>`` dir; at-rest compaction is an offline job either
-    way.  Returns the number of delta batches folded."""
-    import glob as _glob
-    import os
-    import shutil
-
-    delta_root = os.path.join(out_dir, "deltas")
-    delta_dirs = sorted(_glob.glob(os.path.join(delta_root, "batch=*")))
-    if not delta_dirs:
-        return 0
-    base_cols = spark.read.parquet(os.path.join(out_dir, "vectors")).columns
-    deltas = (
-        spark.read.option("basePath", delta_root).parquet(*delta_dirs).select(*base_cols)
-    )
-    deltas.repartition(F.col("cell")).write.mode("append").partitionBy("cell").parquet(
-        os.path.join(out_dir, "vectors")
-    )
-    shutil.rmtree(os.path.join(out_dir, "deltas"))
-    return len(delta_dirs)
 
 
 # most shortlist ids the exact rerank pushes as a literal `vec_id IN
@@ -907,9 +835,10 @@ def ivf_topk_from_index(
         ],
         f"q_id {q_id_type}, q_unit array<double>, q_emb array<double>, cell int",
     )
-    # -> PartitionFilters at the scan (cell is a partition column in
-    # the base layout AND the second level of every streamed delta)
-    v = read_index_vectors(spark, out_dir).where(F.col("cell").isin(probed))
+    # -> PartitionFilters at the scan (cell is a partition column)
+    v = spark.read.parquet(os.path.join(out_dir, "vectors")).where(
+        F.col("cell").isin(probed)
+    )
     fields = v.schema.fieldNames()
     if "codes" in fields and "scale" not in fields:  # pq layout
         books = read_pq_codebooks(spark, out_dir)

@@ -1025,13 +1025,15 @@ class TolerantParser:
             if ch == ",":
                 # thousands separator: `,` + exactly 3 digits not followed
                 # by a 4th, and the token so far must itself look like the
-                # head of a grouped integer — `[42000,390]` is two array
-                # elements, not 42000390 (binary_processors.ex:274-290)
+                # head of a grouped integer (binary_processors.ex:274-290).
+                # Never inside an array, where a comma always separates
+                # elements: `[.5, 583,908]` has three, not `583908`
                 grp = self.s[self.i + 1 : self.i + 4]
                 nxt = self.s[self.i + 4 : self.i + 5]
                 head = self.s[start : self.i]
                 if (
-                    len(grp) == 3
+                    not (self.ctx and self.ctx[-1] == _Frame.ARRAY)
+                    and len(grp) == 3
                     and grp.isdigit()
                     and not nxt.isdigit()
                     and re.fullmatch(r"-?\d{1,3}(?:,\d{3})*", head)

@@ -91,32 +91,6 @@ def quality_filter(
     return out
 
 
-def score_f1(result: DataFrame, labels: DataFrame) -> dict:
-    """keep/drop F1 vs ground-truth labels, broadcast join on url
-    (labels are small relative to the corpus — dims broadcast)."""
-    j = result.select("url", "keep", "repaired").join(
-        F.broadcast(labels.select("url", "expected_keep", "expected_repaired")), "url"
-    )
-    agg = j.agg(
-        F.sum(F.when(F.col("keep") & F.col("expected_keep"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("keep") & ~F.col("expected_keep"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col("keep") & F.col("expected_keep"), 1).otherwise(0)).alias("fn"),
-        F.sum(F.when(F.col("repaired") == F.col("expected_repaired"), 1).otherwise(0)).alias("byte_identical"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    tp, fp, fn = agg["tp"], agg["fp"], agg["fn"]
-    precision = tp / (tp + fp) if tp + fp else 1.0
-    recall = tp / (tp + fn) if tp + fn else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {
-        "f1": f1,
-        "precision": precision,
-        "recall": recall,
-        "byte_identical_rate": agg["byte_identical"] / agg["n"],
-        "n": agg["n"],
-    }
-
-
 def salted_repartition(df: DataFrame, n_partitions: int, key: str = "url", salt_buckets: int = 16) -> DataFrame:
     """Skew-aware repartition: hash(key) xor a per-row salt bucket so a
     hot key (or a run of giant documents sharing a prefix) spreads over

@@ -7,7 +7,7 @@ from collections import Counter
 from json_remedy_spark.kernel import repair
 from json_remedy_spark.sources.webpages import make_row
 
-N = 3000
+N = 200_000  # every row of the sf0.1 corpus
 
 
 def test_byte_identical_repair():

@@ -52,3 +52,52 @@ def test_oracle_sql_is_wellformed_duckdb():
         # parse + plan without executing (EXPLAIN) — catches syntax and
         # unknown-function regressions cheaply
         con.sql(f"EXPLAIN {sql}")
+
+
+# Library defs that no query, job, tool or benchmark reaches, each kept
+# for a stated reason.  A name earns its place here or gets a caller.
+_ORPHAN_ALLOWLIST = {
+    "needs_repair_predicate": "the reference's per-layer supports? union; "
+    "the kernel contract tests compare the layer detectors against it",
+    "byte_vocab_decode": "the decoder the byte-level BPE round-trip tests "
+    "compare against",
+    "assert_scalable": "the one-Arrow-hop, fused-codegen invariant check "
+    "the plan tests run",
+}
+
+
+def test_library_defs_have_a_non_test_caller():
+    """Every top-level def and class in ``json_remedy_spark/`` must be
+    named somewhere outside ``tests/`` other than by its own definition
+    (a query, a job, a tool, the benchmark, or another library def), so
+    code that only tests reach cannot pile up unnoticed."""
+    import ast
+    import os
+    import re
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.split()
+    src = {}
+    for f in files:
+        path = os.path.join(root, f)
+        if os.path.exists(path):
+            with open(path, encoding="utf-8") as fh:
+                src[f] = fh.read()
+    n_defs = {}
+    for f, text in src.items():
+        if f.startswith("json_remedy_spark/"):
+            for node in ast.parse(text).body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    n_defs[node.name] = n_defs.get(node.name, 0) + 1
+    callers = [text for f, text in src.items() if "tests" not in f.split("/")[:-1]]
+    orphans = {
+        name
+        for name, n in n_defs.items()
+        if sum(len(re.findall(rf"\b{name}\b", text)) for text in callers) <= n
+    }
+    assert orphans - set(_ORPHAN_ALLOWLIST) == set(), sorted(orphans - set(_ORPHAN_ALLOWLIST))
+    # an entry whose def is gone or has gained a caller leaves the list
+    assert set(_ORPHAN_ALLOWLIST) <= orphans, sorted(set(_ORPHAN_ALLOWLIST) - orphans)

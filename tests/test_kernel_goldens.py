@@ -138,6 +138,8 @@ NUMBERS = [
     ('{"value": 123€}', {"value": "123€"}),
     ('{"price": $100}', {"price": "$100"}),
     ('{"neg": -1,234}', {"neg": -1234}),
+    # inside an array a comma separates elements, never thousands
+    ('{"a": [.5, 583,908]}', {"a": [0.5, 583, 908]}),
 ]
 
 

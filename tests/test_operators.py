@@ -1,4 +1,5 @@
-"""Operator tests: dedup, similarity, multimodal, streaming, checkpoint."""
+"""Operator tests: dedup, similarity, multimodal, checkpoint, and the
+quality filter over a stream source."""
 
 import os
 
@@ -93,20 +94,6 @@ def test_multimodal_plumbing(spark):
     assert abs(sum(feats[0]["feature"]) - 1.0) < 1e-3
     frames = frame_sample(df).collect()
     assert len(frames) == 2 * N_FRAMES
-
-
-def test_streaming_repair(spark, tmp_path):
-    from json_remedy_spark.streaming.stream_repair import run_once
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    (in_dir / "a.txt").write_text(
-        '{"a": 1}\n{bad: "json",}\nplain prose line no json\n{"c": [1,2,]}\n'
-    )
-    out_dir = str(tmp_path / "out")
-    run_once(spark, str(in_dir), out_dir, str(tmp_path / "ckpt"))
-    got = {r["repaired"] for r in spark.read.parquet(out_dir).collect()}
-    assert got == {'{"a":1}', '{"bad":"json"}', '{"c":[1,2]}'}  # prose line dropped
 
 
 def test_repair_udf_forwards_options(spark):
@@ -225,44 +212,6 @@ def test_salted_repartition_is_deterministic_data(spark):
     assert out.count() == 1000
 
 
-def test_streaming_windowed_metrics(spark, tmp_path):
-    """Watermarked tumbling-window repair metrics over a file stream."""
-    import datetime as dt
-
-    from json_remedy_spark.streaming.stream_repair import repair_metrics_stream
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        (base, '{"a": 1}'),
-        (base + dt.timedelta(seconds=30), "{bad: json,}"),
-        (base + dt.timedelta(minutes=1, seconds=10), "plain prose line"),
-        (base + dt.timedelta(minutes=1, seconds=40), '{"c": [1,2,]}'),
-    ]
-    spark.createDataFrame(rows, "ts timestamp, text string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    stream = spark.readStream.schema("ts timestamp, text string").parquet(str(src))
-    agg = repair_metrics_stream(stream, window="1 minute", watermark="2 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_metrics")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"].minute, r["ok"]): r["docs"]
-        for r in spark.sql("select * from win_metrics").collect()
-    }
-    assert got[(0, True)] == 2   # {"a":1} + repaired {bad: json,}
-    assert got[(1, True)] == 1   # {"c":[1,2,]}
-    assert got[(1, False)] == 1  # prose line dropped
-
-
 def test_ivf_ann_recall(spark):
     """IVF ANN must return the true top-1 for self-queries (vector's
     own cell is always probed)."""
@@ -298,29 +247,6 @@ def test_from_file_wholetext(spark, tmp_path):
     row = from_file(spark, str(p)).collect()[0]
     assert row["ok"] and row["repaired"] == '{"name":"Weiss Savage","age":30}'
     assert row["n_repairs"] > 0
-
-
-def test_stateful_stream_dedup_across_restarts(spark, tmp_path):
-    """applyInPandasWithState dedup: first occurrence wins, state
-    survives a restart via the checkpoint."""
-    from json_remedy_spark.streaming.stateful_dedup import run_once
-
-    in_dir = tmp_path / "sin"
-    in_dir.mkdir()
-    out = str(tmp_path / "sout")
-    ckpt = str(tmp_path / "sckpt")
-
-    (in_dir / "a.txt").write_text("alpha doc\nbeta doc\nalpha doc\n")
-    run_once(spark, str(in_dir), out, ckpt)
-    got1 = {r["text"] for r in spark.read.parquet(out).collect()}
-    assert got1 == {"alpha doc", "beta doc"}
-
-    # second run, new file: duplicate of alpha must stay dropped
-    (in_dir / "b.txt").write_text("alpha doc\ngamma doc\n")
-    run_once(spark, str(in_dir), out, ckpt)
-    rows = spark.read.parquet(out).collect()
-    texts = [r["text"] for r in rows]
-    assert sorted(texts) == ["alpha doc", "beta doc", "gamma doc"]
 
 
 def test_decontaminate_flags_shingle_overlap(spark):
@@ -1070,7 +996,7 @@ def test_extended_gopher_c4_rules(spark):
             "i",
             F.round(quality.bullet_line_ratio(t), 4).alias("b"),
             F.round(quality.ellipsis_line_ratio(t), 4).alias("e"),
-            F.round(quality.alpha_word_ratio(t), 4).alias("a"),
+            F.round(quality.quality_columns(t)["q_alpha_ratio"], 4).alias("a"),
             quality.has_lorem_ipsum(t).alias("l"),
         ).collect()
     }
@@ -1603,92 +1529,6 @@ def test_incremental_near_dup_components_parity_and_bridge(spark):
     assert got_reuse == want
 
 
-def test_stateful_stream_lsh_near_dup(spark, tmp_path):
-    """Streaming minhash-LSH: band-bucket state emits candidate pairs
-    against the bucket representative, across micro-batches and a
-    restart; candidates match the batch LSH operator's verdicts."""
-    from json_remedy_spark.streaming.stateful_lsh import run_once
-
-    in_dir = tmp_path / "lin"
-    in_dir.mkdir()
-    out = str(tmp_path / "lout")
-    ckpt = str(tmp_path / "lckpt")
-    base = "the quick brown fox jumps over the lazy dog"
-    near = "the quick brown fox jumps over the sleepy dog"
-    other = "completely different text about spark pipelines and arrow batches"
-
-    spark.createDataFrame([(0, base), (3, other)], ["doc_id", "text"]).coalesce(1).write.parquet(
-        str(in_dir / "batch1")
-    )
-    run_once(spark, str(in_dir) + "/*", out, ckpt)
-    assert spark.read.parquet(out).count() == 0  # first occurrences: no pairs
-
-    # restart with new files: an exact dup and a near dup of doc 0
-    spark.createDataFrame([(10, base), (11, near)], ["doc_id", "text"]).coalesce(1).write.parquet(
-        str(in_dir / "batch2")
-    )
-    run_once(spark, str(in_dir) + "/*", out, ckpt)
-    pairs = {
-        (r["doc_id"], r["rep_doc_id"])
-        for r in spark.read.parquet(out).dropDuplicates(["doc_id", "rep_doc_id"]).collect()
-    }
-    assert (10, 0) in pairs  # exact dup collides in every band
-    assert (11, 0) in pairs  # near dup collides in >=1 band (batch parity)
-    assert not any(r in pairs for r in [(3, 0), (0, 3)])
-
-
-def test_stream_lsh_ttl_wiring(spark, tmp_path):
-    """TTL-enabled variant runs under a real processing-time trigger
-    (its production mode — availableNow cannot terminate with pending
-    processing-time timeouts, see stateful_lsh docstring) and must not
-    change within-window semantics."""
-    import glob
-    import time
-
-    from json_remedy_spark.streaming.stateful_lsh import stream_lsh_near_dup
-
-    in_dir = tmp_path / "tin"
-    in_dir.mkdir()
-    spark.createDataFrame(
-        [(0, "a b c d e f"), (1, "a b c d e f"), (2, "unrelated words entirely here")],
-        ["doc_id", "text"],
-    ).coalesce(1).write.parquet(str(in_dir / "b1"))
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType([StructField("doc_id", LongType()), StructField("text", StringType())])
-    docs = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
-    q = (
-        stream_lsh_near_dup(docs, ttl_minutes=60)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "tout"))
-        .option("checkpointLocation", str(tmp_path / "tck"))
-        .trigger(processingTime="1 second")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            try:
-                if (
-                    glob.glob(str(tmp_path / "tout" / "*.parquet"))
-                    and spark.read.parquet(str(tmp_path / "tout")).count() >= 1
-                ):
-                    break
-            except Exception:  # sink file visible before its commit
-                pass
-            time.sleep(1)
-    finally:
-        q.stop()
-    pairs = {
-        (r["doc_id"], r["rep_doc_id"])
-        for r in spark.read.parquet(str(tmp_path / "tout"))
-        .dropDuplicates(["doc_id", "rep_doc_id"])
-        .collect()
-    }
-    assert pairs == {(1, 0)}
-
-
 def test_simhash_near_dup_bands(spark, docs):
     """Hamming-band join: exact dups at hamming 0, the near-dup pair
     within <= 3 bits; pigeonhole recall is exact at max_hamming=3."""
@@ -1799,7 +1639,7 @@ def test_lsh_plane_count_shrinks_buckets(spark):
     """More planes => smaller bucket blocks (selectivity knob): the max
     and mean bucket occupancy with 12 planes must be below the 8-plane
     occupancy on the same vectors."""
-    from json_remedy_spark.functions.similarity import with_lsh_bucket
+    from json_remedy_spark.functions.similarity import with_lsh_tables
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
@@ -1807,7 +1647,8 @@ def test_lsh_plane_count_shrinks_buckets(spark):
 
     def occupancy(n_planes):
         counts = (
-            with_lsh_bucket(emb, n_planes=n_planes)
+            with_lsh_tables(emb, col="embedding", n_tables=1, n_planes=n_planes)
+            .select(F.col("tables")[0].alias("bucket"))
             .groupBy("bucket")
             .agg(F.count("*").alias("n"))
             .agg(F.max("n").alias("mx"), F.avg("n").alias("avg"))
@@ -1903,18 +1744,27 @@ def test_catalog_adapter_falls_back_without_iceberg(spark, tmp_path):
 
 
 def test_streaming_quality_filter_matches_batch(spark, tmp_path):
-    """The full quality-filter DAG must produce identical rows when run
-    as a stream (availableNow) and as a batch over the same pages."""
+    """The paper's stateless Stream is the batch quality filter over a
+    ``readStream`` source: drained once (availableNow) into a parquet
+    sink, it must produce the batch rows over the same pages."""
     from json_remedy_spark.operators.pipeline import quality_filter
-    from json_remedy_spark.sources.webpages import synthesize_corpus
-    from json_remedy_spark.streaming.stream_repair import run_quality_filter_stream
+    from json_remedy_spark.sources.webpages import CORPUS_SCHEMA, synthesize_corpus
 
     docs, _ = synthesize_corpus(spark, 200, partitions=2)
     src = str(tmp_path / "pages")
     docs.write.parquet(src)
 
     out = str(tmp_path / "stream_out")
-    run_quality_filter_stream(spark, src, out, str(tmp_path / "ckpt"))
+    pages = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
+    (
+        quality_filter(pages, with_actions=False)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     streamed = {
         (r["url"], r["keep"], r["repaired"], r["scrubbed"])
         for r in spark.read.parquet(out).collect()
@@ -2153,47 +2003,6 @@ def test_vocab_stats_topk_uses_bounded_sort(spark):
     d = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
     plan = vocab_stats(d, top_k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # per-partition top-K, no full sort
-
-
-def test_stream_line_dedup_across_restarts(spark, tmp_path):
-    """Streaming boilerplate removal: lines seen in an earlier run's
-    store drop in later runs; within-batch first-occurrence is the
-    deterministic (url, line_no) winner, matching the batch operator."""
-    import datetime
-
-    from json_remedy_spark.streaming.stream_line_dedup import (
-        read_deduped,
-        run_line_dedup_stream,
-    )
-
-    ts = datetime.datetime(2026, 1, 1)
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [(u, ts, t.encode(), t, "en") for u, t in rows],
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        )
-
-    src = str(tmp_path / "src")
-    out, ckpt, store = (str(tmp_path / d) for d in ("out", "ckpt", "store"))
-
-    pages([("a", "cookie banner\nunique a"), ("b", "cookie banner\nunique b")]) \
-        .coalesce(1).write.mode("append").parquet(src)
-    run_line_dedup_stream(spark, src, out, ckpt, store)
-    got1 = {r["url"]: r["text"] for r in read_deduped(spark, out).collect()}
-    assert got1["a"] == "cookie banner\nunique a"
-    assert got1["b"] == "unique b"
-
-    # restart with a NEW file: the cookie banner is in the store now;
-    # 'fresh line' is new and dedups within the batch (url 'c' wins)
-    pages([("c", "cookie banner\nunique c\nfresh line"),
-           ("d", "fresh line\nunique d")]) \
-        .coalesce(1).write.mode("append").parquet(src)
-    run_line_dedup_stream(spark, src, out, ckpt, store)
-    got2 = {r["url"]: r["text"] for r in read_deduped(spark, out).collect()}
-    assert got2["c"] == "unique c\nfresh line"
-    assert got2["d"] == "unique d"
-    assert len(got2) == 4 and got2["a"] == got1["a"]
 
 
 def test_line_dedup_paragraph_mode(spark):
@@ -2496,105 +2305,6 @@ def test_dup_span_removal_hot_window_skew(spark):
     assert agg["nd"] == 19999 * 6
     bodies = out.where(~F.col("text").contains("please"))
     assert bodies.where(~F.col("text").startswith("body")).count() == 0
-
-
-def test_stream_line_dedup_bloom_parity(spark, tmp_path):
-    """The bloom-prefiltered streaming path must produce byte-identical
-    output to the plain-join path across a restart, including under a
-    saturated (tiny) bloom where almost every probe is a false
-    positive."""
-    import datetime
-
-    from json_remedy_spark.streaming.stream_line_dedup import (
-        read_deduped,
-        run_line_dedup_stream,
-    )
-
-    ts = datetime.datetime(2026, 1, 1)
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [(u, ts, t.encode(), t, "en") for u, t in rows],
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        )
-
-    batch1 = [("a", "cookie banner\nunique a"), ("b", "cookie banner\nunique b")]
-    batch2 = [("c", "cookie banner\nunique c\nfresh line"),
-              ("d", "fresh line\nunique d")]
-
-    results = {}
-    for mode, bits in [("plain", 0), ("bloom", 1 << 12), ("tiny_bloom", 64)]:
-        src = str(tmp_path / f"src_{mode}")
-        out, ckpt, store = (
-            str(tmp_path / f"{d}_{mode}") for d in ("out", "ckpt", "store")
-        )
-        kw = dict(use_bloom=bits > 0)
-        if bits:
-            kw["bloom_bits"] = bits
-        pages(batch1).coalesce(1).write.mode("append").parquet(src)
-        run_line_dedup_stream(spark, src, out, ckpt, store, **kw)
-        pages(batch2).coalesce(1).write.mode("append").parquet(src)
-        run_line_dedup_stream(spark, src, out, ckpt, store, **kw)
-        results[mode] = sorted(
-            (r["url"], r["text"]) for r in read_deduped(spark, out).collect()
-        )
-    assert results["plain"] == results["bloom"] == results["tiny_bloom"]
-    assert dict(results["plain"])["c"] == "unique c\nfresh line"
-
-
-def test_stateful_stream_embedding_near_dup(spark, tmp_path):
-    """Streaming EMBEDDING near-dup: the multi-table hyperplane banding
-    lifts to a bucket-keyed stateful stream; an identical and a
-    nearly-identical vector collide with the first-seen representative
-    across a restart, an orthogonal vector never does."""
-    from pyspark.sql.types import (
-        ArrayType, FloatType, LongType, StructField, StructType,
-    )
-
-    from json_remedy_spark.streaming.stateful_lsh import stream_embedding_near_dup
-
-    base = [1.0, 0.2, 0.0, 0.5]
-    near = [1.0, 0.21, 0.0, 0.5]
-    ortho = [0.0, 0.0, 1.0, 0.0]
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-    ])
-
-    in_dir = tmp_path / "ein"
-    in_dir.mkdir()
-    out, ckpt = str(tmp_path / "eout"), str(tmp_path / "eckpt")
-
-    def drain():
-        vecs = spark.readStream.schema(schema).parquet(str(in_dir) + "/*")
-        q = (
-            stream_embedding_near_dup(vecs)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame([(0, base), (3, ortho)], schema).coalesce(1).write.parquet(
-        str(in_dir / "b1")
-    )
-    drain()
-    assert spark.read.parquet(out).count() == 0  # first occurrences
-
-    spark.createDataFrame([(10, base), (11, near)], schema).coalesce(1).write.parquet(
-        str(in_dir / "b2")
-    )
-    drain()
-    pairs = {
-        (r["doc_id"], r["rep_doc_id"])
-        for r in spark.read.parquet(out).dropDuplicates(["doc_id", "rep_doc_id"]).collect()
-    }
-    assert (10, 0) in pairs  # identical vector collides in every table
-    assert (11, 0) in pairs  # near vector shares a sign pattern
-    assert not any(p[0] == 3 or p[1] == 3 for p in pairs)
 
 
 def test_stage_checkpointer_resume_and_halfwritten(spark, tmp_path):
@@ -3137,57 +2847,6 @@ def test_sessionize_gap_semantics(spark):
     assert out[(3, 1)]["n_events"] == 2
     assert out[(3, 2)]["n_events"] == 1
     assert out[(1, 1)]["duration_us"] == 10 * 60 * 1_000_000
-
-
-def test_stream_sessions_restart_and_late_finalization(spark, tmp_path):
-    """Streaming sessionization (session_window + watermark): sessions
-    finalize once the watermark passes their close — including across
-    a restart from the checkpoint — and agree with the batch
-    sessionize rollup for the finalized window."""
-    import datetime as dt
-
-    from json_remedy_spark.streaming.stream_sessions import run_once
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    # batch 1: user 1 has a 2-event session; a much-later event from
-    # user 2 advances the watermark far past user 1's session close
-    spark.createDataFrame(
-        [
-            (0, t0, 1),
-            (1, t0 + dt.timedelta(minutes=5), 1),
-            (2, t0 + dt.timedelta(hours=6), 2),
-        ],
-        "event_id long, ts timestamp, user_id long",
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_once(spark, str(in_dir), out, ck, gap_minutes=30)
-    rows = {r["user_id"]: r for r in spark.read.parquet(out).collect()}
-    assert rows[1]["n_events"] == 2
-    assert 2 not in rows  # user 2's session is still open
-
-    # batch 2 (restart from checkpoint): an even later event finalizes
-    # user 2's session
-    spark.createDataFrame(
-        [(3, t0 + dt.timedelta(hours=20), 3)],
-        "event_id long, ts timestamp, user_id long",
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_once(spark, str(in_dir), out, ck, gap_minutes=30)
-    rows2 = {r["user_id"]: r for r in spark.read.parquet(out).collect()}
-    assert rows2[2]["n_events"] == 1
-    # batch-operator agreement on the finalized session
-    from json_remedy_spark.functions.events import sessionize
-
-    b = sessionize(
-        spark.createDataFrame(
-            [(0, t0, 1), (1, t0 + dt.timedelta(minutes=5), 1)],
-            "event_id long, ts timestamp_ntz, user_id long",
-        ),
-        30,
-    ).collect()[0]
-    assert b["n_events"] == rows2[1]["n_events"]
 
 
 def test_ngram_repetition_string_keyed_ids(spark):

@@ -70,34 +70,6 @@ def test_minhash_zero_shuffle(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Both sides bucketed by the join key -> exchange-free join."""
-    from json_remedy_spark.operators.bucketing import bucketed_join, write_bucketed
-    from json_remedy_spark.plans.explain import executed_plan
-
-    import uuid
-
-    suffix = uuid.uuid4().hex[:8]
-    t_left, t_right = f"t_left_{suffix}", f"t_right_{suffix}"
-    left = spark.range(1000).selectExpr("concat('u', id) AS url", "id AS a")
-    right = spark.range(1000).selectExpr("concat('u', id) AS url", "id * 2 AS b")
-    write_bucketed(left, t_left, n_buckets=8)
-    write_bucketed(right, t_right, n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, t_left, t_right)
-        plan = executed_plan(joined)
-        # matching bucket specs -> SortMergeJoin with no shuffle exchange
-        assert "hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE {t_left}")
-        spark.sql(f"DROP TABLE {t_right}")
-
-
 def test_ngram_repetition_zero_shuffle(spark):
     """Per-document Gopher signals must stay map-only — the round-3
     explode+groupBy form cost 4 exchanges / 21 s at sf0.1."""

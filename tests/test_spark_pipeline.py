@@ -1,11 +1,39 @@
 """End-to-end Spark pipeline: corpus -> quality_filter -> F1 + bytes."""
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from json_remedy_spark.operators.pipeline import quality_filter, score_f1, salted_repartition
+from json_remedy_spark.operators.pipeline import quality_filter, salted_repartition
 from json_remedy_spark.sources.webpages import synthesize_corpus
 
 N = 2000
+
+
+def score_f1(result: DataFrame, labels: DataFrame) -> dict:
+    """keep/drop F1 vs ground-truth labels, broadcast join on url
+    (labels are small relative to the corpus — dims broadcast)."""
+    j = result.select("url", "keep", "repaired").join(
+        F.broadcast(labels.select("url", "expected_keep", "expected_repaired")), "url"
+    )
+    agg = j.agg(
+        F.sum(F.when(F.col("keep") & F.col("expected_keep"), 1).otherwise(0)).alias("tp"),
+        F.sum(F.when(F.col("keep") & ~F.col("expected_keep"), 1).otherwise(0)).alias("fp"),
+        F.sum(F.when(~F.col("keep") & F.col("expected_keep"), 1).otherwise(0)).alias("fn"),
+        F.sum(F.when(F.col("repaired") == F.col("expected_repaired"), 1).otherwise(0)).alias("byte_identical"),
+        F.count("*").alias("n"),
+    ).collect()[0]
+    tp, fp, fn = agg["tp"], agg["fp"], agg["fn"]
+    precision = tp / (tp + fp) if tp + fp else 1.0
+    recall = tp / (tp + fn) if tp + fn else 1.0
+    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    return {
+        "f1": f1,
+        "precision": precision,
+        "recall": recall,
+        "byte_identical_rate": agg["byte_identical"] / agg["n"],
+        "n": agg["n"],
+    }
 
 
 @pytest.fixture(scope="module")

@@ -464,28 +464,27 @@ def main():
     import tempfile
 
     from json_remedy_spark.functions.similarity import (
+        append_to_ivf_index,
         ivf_topk_from_index,
         write_ivf_index,
     )
-    from json_remedy_spark.streaming.stream_ivf_ingest import run_ivf_ingest_stream
 
     with tempfile.TemporaryDirectory() as td:
         idx = os.path.join(td, "ivf")
         write_ivf_index(emb.where("vec_id % 2 = 0"), idx, cells=8, quantize="sq8")
-        src = os.path.join(td, "src")
-        emb.where("vec_id % 2 = 1").select("vec_id", "embedding").coalesce(1).write.parquet(src)
-        run_ivf_ingest_stream(spark, src, idx, os.path.join(td, "ckpt"))
+        append_to_ivf_index(spark, idx, emb.where("vec_id % 2 = 1"))
         q = emb.where(F.col("vec_id") < 2).select(F.col("vec_id").alias("q_id"), "embedding")
         iv = ivf_topk_from_index(spark, idx, q, k=3, probes=2)
         ivplan = formatted(iv)
         pf = ivplan.count("PartitionFilters: [cell")
         sections.append(
             (
-                "ivf_topk_from_index (at-rest sq8 index + streamed delta, probed-cell pruning)",
-                f"scans with probed-cell PartitionFilters: {pf} (budget 2 — the "
-                "compacted base AND the streamed delta batch both prune to the "
-                "probed cells; everything else is never listed or read)\n"
-                f"union of base+delta present: {'Union' in ivplan}\n\n" + ivplan[:2500],
+                "ivf_topk_from_index (at-rest sq8 index after an append, probed-cell pruning)",
+                f"scans with probed-cell PartitionFilters: {pf} (budget 1 — the "
+                "appended vectors land in the same cell directories, so one "
+                "scan prunes to the probed cells; everything else is never "
+                "listed or read)\n"
+                f"Union present: {'Union' in ivplan}\n\n" + ivplan[:2500],
             )
         )
 
@@ -616,33 +615,21 @@ def main():
         bm25_topk_from_postings,
         write_postings_table,
     )
-    from json_remedy_spark.streaming.stream_postings_ingest import (
-        run_postings_ingest_stream,
-    )
 
     with tempfile.TemporaryDirectory() as td:
         pidx = os.path.join(td, "postings")
-        write_postings_table(
-            docs.where("doc_id % 2 = 0"), pidx, n_buckets=8, max_df_frac=1.0
-        )
-        src = os.path.join(td, "src")
-        docs.where("doc_id % 2 = 1").select("doc_id", "text").coalesce(
-            1
-        ).write.parquet(src)
-        run_postings_ingest_stream(spark, src, pidx, os.path.join(td, "ckpt"))
+        write_postings_table(docs, pidx, n_buckets=8, max_df_frac=1.0)
         pb = bm25_topk_from_postings(spark, pidx, bq, k=5)
         pbplan = formatted(pb)
         sections.append(
             (
-                "bm25_topk_from_postings (at-rest postings + streamed delta, term-bucket pruning)",
+                "bm25_topk_from_postings (at-rest postings, term-bucket pruning)",
                 f"scans with probed-bucket PartitionFilters: "
-                f"{pbplan.count('PartitionFilters: [bucket')} (budget 2 — base "
-                "AND delta postings prune to the query terms' buckets; the "
-                "vocabulary-sized df tables keep bucket as a data column and "
-                "get the same In(bucket,...) as a row-group PushedFilter: "
-                f"{pbplan.count('PushedFilters: [In(bucket')} scans; merged df "
-                "re-applies the stopword cap at merged corpus size)\n"
-                f"union of base+delta present: {'Union' in pbplan}\n"
+                f"{pbplan.count('PartitionFilters: [bucket')} (budget 1 — the "
+                "postings scan prunes to the query terms' buckets; the "
+                "vocabulary-sized df table keeps bucket as a data column and "
+                "gets the same In(bucket,...) as a row-group PushedFilter: "
+                f"{pbplan.count('PushedFilters: [In(bucket')} scans)\n"
                 f"SortMergeJoin nodes: {tree_nodes(pbplan, 'SortMergeJoin')} "
                 "(budget 0 — query terms and idf broadcast)\n\n" + pbplan[:2500],
             )
