@@ -28,25 +28,21 @@ def decontaminate(
     eval_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag every corpus doc sharing at
     least one w-word shingle with ANY eval/benchmark document.
 
     Scale shape: the eval set is tiny next to the corpus, so its
-    DISTINCT shingle set BROADCASTS by default — the corpus-side
-    shingle kernel (the same zero-shuffle mapInPandas as minhash)
-    streams once map-only against the broadcast hash set; only
-    (doc_id) hits shuffle for the final distinct.  The corpus shingle
-    table is never re-keyed or exchanged.  For an eval set too large
-    to broadcast (executor-memory bound, roughly >100M distinct
-    shingles), pass ``broadcast_eval=False`` to fall back to a shuffle
-    join on the shingle key.  Returns (doc_id, contaminated) for every
-    corpus doc."""
+    DISTINCT shingle set BROADCASTS — the corpus-side shingle kernel
+    (the same zero-shuffle mapInPandas as minhash) streams once
+    map-only against the broadcast hash set; only (doc_id) hits
+    shuffle for the final distinct.  The corpus shingle table is
+    never re-keyed or exchanged.  Returns (doc_id, contaminated) for
+    every corpus doc."""
     corpus_sh = shingles(docs, id_col, text_col)
-    eval_sh = shingles(eval_docs, id_col, text_col).select("shingle").distinct()
-    if broadcast_eval:
-        eval_sh = F.broadcast(eval_sh)
+    eval_sh = F.broadcast(
+        shingles(eval_docs, id_col, text_col).select("shingle").distinct()
+    )
     hits = (
         corpus_sh.join(eval_sh, "shingle")
         .select("doc_id")
@@ -65,7 +61,6 @@ def contamination_overlap(
     eval_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-doc contamination REPORT — the fraction of a doc's distinct
     w-word shingles that appear in the eval/benchmark set.  This is
@@ -78,14 +73,12 @@ def contamination_overlap(
     hash aggregate keyed by doc_id — no corpus-side re-key.  Returns
     ``(doc_id, n_shingles, n_matched, overlap_frac)`` for every doc."""
     corpus_sh = shingles(docs, id_col, text_col)
-    eval_sh = (
+    eval_sh = F.broadcast(
         shingles(eval_docs, id_col, text_col)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    if broadcast_eval:
-        eval_sh = F.broadcast(eval_sh)
     per_doc = (
         corpus_sh.join(eval_sh, "shingle", "left")
         .groupBy("doc_id")
@@ -563,7 +556,6 @@ def host_boilerplate_removal(
     max_line_frac: float = 0.5,
     min_line_chars: int = 1,
     sep: str = "\n",
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """Per-host template ("site chrome") removal — the RefinedWeb /
     CCNet boilerplate move that ``line_dedup`` cannot express: a line
@@ -584,9 +576,7 @@ def host_boilerplate_removal(
        never shuffles on the hot key;
     3. host page totals are one tiny groupBy(host);
     4. the chrome rule set (host, line_hash) — small: only lines above
-       the frac threshold — joins back BROADCAST by default
-       (``broadcast_rules=False`` falls back to a shuffle join + AQE
-       skew split for rule sets past the broadcast ceiling);
+       the frac threshold — joins back BROADCAST;
     5. reassembly is one groupBy(doc_id) ordered collect, identical to
        ``line_dedup``.
 
@@ -609,7 +599,7 @@ def host_boilerplate_removal(
         .agg(F.count_distinct("doc_id").alias("n_pages"))
     )
     host_pages = pages.groupBy("host").agg(F.count("*").alias("host_pages"))
-    rules = (
+    rules = F.broadcast(
         line_pages.join(host_pages, "host")
         .where(
             (F.col("host_pages") >= min_host_pages)
@@ -617,8 +607,6 @@ def host_boilerplate_removal(
         )
         .select("host", "line_hash", F.lit(True).alias("is_chrome"))
     )
-    if broadcast_rules:
-        rules = F.broadcast(rules)
     kept = (
         lines.withColumn("line_hash", F.md5("line"))
         .join(rules, ["host", "line_hash"], "left")

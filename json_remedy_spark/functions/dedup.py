@@ -237,27 +237,9 @@ def candidate_pairs_from_banded(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
     big = with_sz.where(F.col("_sz") > hub_cap).drop("_sz")
-    # n_hubs smallest doc_ids per mega-bucket via n_hubs rounds of a
-    # plain min() agg (bounded state, map-side combine) instead of
-    # ranking every member with a window.  n_hubs is a tiny constant
-    # (default 2) and mega-buckets are rare, so the extra passes scan
-    # almost nothing.
-    remaining = big
-    hub_frames = []
-    for _ in range(n_hubs):
-        h = remaining.groupBy("band", "bucket").agg(F.min("doc_id").alias("doc_id"))
-        hub_frames.append(h)
-        remaining = (
-            remaining.join(h.withColumnRenamed("doc_id", "_h"), ["band", "bucket"])
-            .where(F.col("doc_id") > F.col("_h"))
-            .drop("_h")
-        )
-    hubs = hub_frames[0]
-    for h in hub_frames[1:]:
-        hubs = hubs.unionByName(h)
     starred = (
         big.alias("m")
-        .join(hubs.alias("h"), ["band", "bucket"])
+        .join(_bucket_hubs(big, n_hubs).alias("h"), ["band", "bucket"])
         .where(F.col("h.doc_id") < F.col("m.doc_id"))
         .select(F.col("h.doc_id").alias("doc_a"), F.col("m.doc_id").alias("doc_b"))
     )
@@ -268,7 +250,6 @@ def lsh_candidate_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    handles: list | None = None,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band signature are candidates."""
     from pyspark import StorageLevel
@@ -279,12 +260,9 @@ def lsh_candidate_pairs(
     # read ONE materialization instead of recomputing it per side.
     # At 100 TB this is a signature table written bucketed by
     # (band, bucket) instead of an in-memory cache (see
-    # write_signature_table / candidates_from_signature_table).
-    # Long-lived sessions: pass ``handles`` to receive the persisted
-    # frame for unpersist, or clearCache between jobs.
+    # write_signature_table / lsh_candidate_pairs_from_table).
+    # Long-lived sessions clearCache between jobs.
     banded = banded_signatures(sig).persist(StorageLevel.MEMORY_AND_DISK)
-    if handles is not None:
-        handles.append(banded)
     return candidate_pairs_from_banded(banded)
 
 
@@ -416,8 +394,6 @@ def incremental_near_dup_components(
     text_col: str = "text",
     hub_cap: int | None = None,
     n_hubs: int = 2,
-    algorithm: str = "min_label",
-    handles: list | None = None,
     seen_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental fuzzy dedup of a NEW dump against the accumulated
@@ -480,15 +456,10 @@ def incremental_near_dup_components(
     )
     ids = prior.select("doc_id").unionByName(new.select("doc_id"))
     comp = components_from_pairs(
-        ids,
-        verified.select("doc_a", "doc_b").unionByName(prior_edges),
-        algorithm=algorithm,
+        ids, verified.select("doc_a", "doc_b").unionByName(prior_edges)
     )
-    if handles is not None:
-        handles.extend([new_banded, cand, sh])
-    else:
-        for h in (new_banded, cand, sh):
-            h.unpersist()
+    for h in (new_banded, cand, sh):
+        h.unpersist()
     return comp
 
 
@@ -498,7 +469,6 @@ def jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
-    handles: list | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over all shingle-sharing pairs.
 
@@ -515,12 +485,9 @@ def jaccard_pairs(
     # unmaterialized, the Python kernel ran three times (r07).  persist
     # (not localCheckpoint): lazy, and the CacheManager dedupes the
     # plan so repeated invocations in one session share one
-    # materialization; long-lived sessions pass ``handles`` for the
-    # unpersist, or clearCache between jobs (the lsh_candidate_pairs
-    # contract)
+    # materialization; long-lived sessions clearCache between jobs (the
+    # lsh_candidate_pairs contract)
     sh = shingles(docs, id_col, text_col).persist()
-    if handles is not None:
-        handles.append(sh)
     if max_shingle_df is not None:
         hot = (
             sh.groupBy("shingle")
@@ -631,9 +598,7 @@ _SIMHASH_CHUNK_BITS = SIMHASH_BITS // SIMHASH_BANDS
 _SIMHASH_CHUNK_MASK = (1 << _SIMHASH_CHUNK_BITS) - 1
 
 
-def simhash_near_dup_from_fingerprints(
-    fp: DataFrame, max_hamming: int = 3, handles: list | None = None
-) -> DataFrame:
+def simhash_near_dup_from_fingerprints(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup join over a precomputed (doc_id, simhash) table.
 
     Bands the 64-bit fingerprint into SIMHASH_BANDS 16-bit chunks and
@@ -642,8 +607,7 @@ def simhash_near_dup_from_fingerprints(
     bits cannot differ in all 4 bands).  Candidates verify with
     ``bit_count(xor) <= max_hamming``.  One shuffle on (band, chunk),
     never all-pairs; the fingerprint table materializes once and feeds
-    both join sides (pass ``handles`` to receive the persisted
-    DataFrame for caller-controlled ``unpersist``)."""
+    both join sides."""
     from pyspark import StorageLevel
 
     if max_hamming >= SIMHASH_BANDS:
@@ -667,8 +631,6 @@ def simhash_near_dup_from_fingerprints(
         .select("doc_id", "simhash", F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if handles is not None:
-        handles.append(banded)
     return (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "chunk"])
@@ -688,14 +650,11 @@ def simhash_near_dup(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    handles: list | None = None,
 ) -> DataFrame:
     """Fuzzy near-duplicate join over SimHash fingerprints (compute
     fingerprints, then the banded join of
     ``simhash_near_dup_from_fingerprints``)."""
-    return simhash_near_dup_from_fingerprints(
-        simhash(docs, id_col, text_col), max_hamming, handles=handles
-    )
+    return simhash_near_dup_from_fingerprints(simhash(docs, id_col, text_col), max_hamming)
 
 
 # Up to this many pairs (the bounded_collect cap; collect_max_pairs <= 0
@@ -706,8 +665,7 @@ def simhash_near_dup(
 # at suite scale the loop's per-round localCheckpoint + convergence-agg
 # jobs dominate wall time.  Identical output by construction — min
 # reachable id per component is exactly what min-label converges to
-# (parity pytest-pinned); larger graphs and algorithm="star" keep the
-# distributed iteration unchanged.
+# (parity pytest-pinned); larger graphs keep the distributed iteration.
 SMALL_GRAPH_COLLECT_PAIRS = 1 << 20
 
 
@@ -715,7 +673,6 @@ def components_from_pairs(
     all_ids: DataFrame,
     pairs: DataFrame,
     max_iters: int = 20,
-    algorithm: str = "min_label",
     stats_out: dict | None = None,
     collect_max_pairs: int = SMALL_GRAPH_COLLECT_PAIRS,
 ) -> DataFrame:
@@ -733,30 +690,20 @@ def components_from_pairs(
     monotonically-decreasing label sum, one cheap aggregate per round
     instead of an old-vs-new join.
 
-    ``algorithm="star"`` switches to large-star/small-star (Kiveris et
-    al. 2014, "Connected Components in MapReduce and Beyond"): two
-    joins per round but O(log n) rounds — the escape hatch for 10^9+
-    docs with adversarial long-chain graphs, where min-label's
-    O(diameter) rounds would dominate.  Identical output (parity
-    tested); default stays min-label because near-dup graphs are
-    shallow.
-
     ``all_ids``: one column ``doc_id``; ``pairs``: ``doc_a``/``doc_b``.
     Returns (doc_id, rep_id, is_canonical).  ``stats_out`` (optional
-    dict) receives {"rounds": N} — the round-complexity evidence hook
-    for the adversarial-graph drills."""
-    if algorithm not in ("min_label", "star"):
-        raise ValueError(f"unknown components algorithm: {algorithm!r}")
+    dict) receives {"rounds": N}; the driver route reports 0 rounds
+    plus ``driver_union_find`` and ``label_sizes``."""
     # materialize the pair list ONCE before mirroring: the union's two
     # branches each scan `pairs`, and when pairs is an expensive DAG
     # (the LSH->jaccard verifier) an unmaterialized union runs it twice
     # persist (lazy, CacheManager-deduped — a repeated identical run
     # reuses the materialization) rather than an eager localCheckpoint
     # here; the fast path consumes it driver-side and unpersists, and
-    # the iterative paths take ONE localCheckpoint off it below for
+    # the iterative path takes ONE localCheckpoint off it below for
     # lineage truncation before releasing the cache entry (r07)
     p = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).persist()
-    pdf = bounded_collect(p, collect_max_pairs if algorithm == "min_label" else 0)
+    pdf = bounded_collect(p, collect_max_pairs)
     if pdf is not None:
         sizes: dict = {}
         id_type = p.schema["u"].dataType.simpleString()
@@ -778,10 +725,6 @@ def components_from_pairs(
     # at 250 pairs a 64-partition loop spends ~1.5 s/round scheduling
     # empty tasks; at 10^9 pairs this grows back to a real fan-out
     parts = max(1, min(2048, p.count() // 500_000 + 1))
-    if algorithm == "star":
-        return _rejoin_singletons(
-            all_ids, _star_components(p, parts, max_iters, stats_out)
-        )
     edges = (
         p.union(p.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(parts, "v")
@@ -891,108 +834,12 @@ def _rejoin_singletons(all_ids: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _star_components(
-    p: DataFrame, parts: int, max_iters: int, stats_out: dict | None = None
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") over the pair list
-    ``p`` (columns u, v) — O(log n) rounds, two shuffle joins per
-    round.  Returns (doc_id, rep_id) for every node in the graph.
-
-    Round structure, edges kept canonical as (u > v):
-
-    * large-star at node u: every STRICTLY LARGER neighbor is
-      re-pointed at m = min(neighborhood of u, including u) — long
-      tails collapse toward small labels from both ends;
-    * small-star at node u: u and all its smaller neighbors re-point
-      at the smallest of them.
-
-    Both steps only ever replace an edge endpoint with a smaller
-    node id, so (count, sum(u), sum(v)) is a monotone potential — the
-    same cheap fixpoint detector as min-label's label sum (DECIMAL to
-    survive full-range 64-bit hash ids under ANSI mode).  At fixpoint
-    the edge set is a star forest (u -> component min); a node with
-    two remaining parents would still change under small-star, so each
-    non-root has exactly one.  Every round localCheckpoints — the
-    iterative-plan-growth driver-OOM gotcha applies here exactly as in
-    min-label."""
-    # canonical dedup'd edge set, self-loops dropped
-    e = (
-        p.where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .repartition(parts, "u")
-        .localCheckpoint()
-    )
-
-    def stats(df):
-        r = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).collect()[0]
-        return (r["n"], r["su"], r["sv"])
-
-    prev = stats(e)
-    for _round in range(max_iters):
-        if stats_out is not None:
-            stats_out["rounds"] = _round + 1
-        # ---- large-star ------------------------------------------------
-        nbrs = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        e = (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            # new edge (v, m): v > u >= m, already canonical, never a loop
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # ---- small-star ------------------------------------------------
-        sm = e.groupBy("u").agg(F.min("v").alias("m"))
-        from_u = sm.select("u", F.col("m").alias("v"))
-        from_nbrs = (
-            e.join(sm, "u")
-            .where(F.col("v") != F.col("m"))
-            # old smaller neighbor v re-points at m < v: canonical
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = (
-            from_u.union(from_nbrs)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .repartition(parts, "u")
-            .localCheckpoint()
-        )
-        cur = stats(e)
-        if cur == prev:  # star forest reached
-            nodes = (
-                e.select(F.col("u").alias("doc_id"))
-                .union(e.select(F.col("v").alias("doc_id")))
-                .distinct()
-            )
-            return nodes.join(
-                e.select(F.col("u").alias("doc_id"), F.col("v").alias("rep_id")),
-                "doc_id",
-                "left",
-            ).select("doc_id", F.coalesce("rep_id", F.col("doc_id")).alias("rep_id"))
-        prev = cur
-    raise ValueError(f"_star_components did not converge in {max_iters} rounds")
-
-
 def near_dup_components(
     docs: DataFrame,
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
     handles: list | None = None,
-    algorithm: str = "min_label",
     hub_cap: int | None = None,
     n_hubs: int = 2,
     stats_out: dict | None = None,
@@ -1011,8 +858,7 @@ def near_dup_components(
         hub_cap=hub_cap, n_hubs=n_hubs,
     )
     return components_from_pairs(
-        docs.select(F.col(id_col).alias("doc_id")), pairs, algorithm=algorithm,
-        stats_out=stats_out,
+        docs.select(F.col(id_col).alias("doc_id")), pairs, stats_out=stats_out
     )
 
 
@@ -1023,7 +869,6 @@ def soft_dedup_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
     handles: list | None = None,
-    algorithm: str = "min_label",
     hub_cap: int | None = None,
     n_hubs: int = 2,
 ) -> DataFrame:
@@ -1048,7 +893,7 @@ def soft_dedup_weights(
     stats: dict = {}
     comp = near_dup_components(
         docs, threshold, id_col, text_col, handles=handles,
-        algorithm=algorithm, hub_cap=hub_cap, n_hubs=n_hubs, stats_out=stats,
+        hub_cap=hub_cap, n_hubs=n_hubs, stats_out=stats,
     )
     if "label_sizes" in stats:
         # the driver union-find already knows every component's size

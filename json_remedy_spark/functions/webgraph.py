@@ -310,22 +310,18 @@ def robots_filter(
     rules: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """Pages + a ``robots_disallowed`` flag: true iff the page's host
     has a ``*``-agent Disallow prefix matching the URL path (prefix
     match on path+query, RFC 9309 §2.2.2).  Callers drop flagged rows
     map-side before any downstream spend.
 
-    The rule table broadcasts by default (one host's rules are a few
-    strings; even 10^8 hosts fit a few GB — set
-    ``broadcast_rules=False`` past that and the join shuffles on host
-    with AQE skew-split).  Pages never duplicate: the prefix join's
-    hits collapse to a distinct id set before flagging."""
+    The rule table broadcasts (one host's rules are a few strings;
+    even 10^8 hosts fit a few GB).  Pages never duplicate: the prefix
+    join's hits collapse to a distinct id set before flagging."""
     host = F.col("_robots_host")
     keyed = pages.withColumn("_robots_host", url_host(F.col(url_col)))
-    if broadcast_rules:
-        rules = F.broadcast(rules)
+    rules = F.broadcast(rules)
     hits = (
         keyed.select(F.col(id_col).alias("_rid"), host.alias("host"), url_path(F.col(url_col)).alias("_path"))
         .join(rules, "host")
@@ -648,7 +644,6 @@ def blocklist_filter(
     blocklist: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    broadcast_list: bool = True,
 ) -> DataFrame:
     """Pages + ``(blocked, block_category)`` from a (host, category)
     domain blocklist (the UT1-style category ban every web pipeline
@@ -657,12 +652,10 @@ def blocklist_filter(
     first matching category (deterministic under multi-match).
 
     Scale shape: the list broadcasts (UT1 is ~4M rows — a few hundred
-    MB; ``broadcast_list=False`` shuffles on host past executor
-    memory); pages explode only their ~5-row suffix chain, and hits
+    MB); pages explode only their ~5-row suffix chain, and hits
     collapse to a distinct id set before the flag join-back — page
     text never moves."""
-    if broadcast_list:
-        blocklist = F.broadcast(blocklist)
+    blocklist = F.broadcast(blocklist)
     keyed = pages.select(
         F.col(id_col).alias("_bid"),
         F.explode(host_suffixes(F.col(url_col))).alias("host"),

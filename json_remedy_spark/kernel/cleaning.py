@@ -184,31 +184,6 @@ def extract_from_html(s: str, log: list) -> str:
     return s
 
 
-def extract_from_prose(s: str, log: list) -> str:
-    """len>100, not JSON-leading, contains a brace -> first balanced span
-    (content_cleaning.ex:681-783)."""
-    t = s.strip()
-    # wrapper-text gate (multiple_json_detector.ex:78-86): a valid JSON
-    # leading char means this is values-not-prose — leave it alone
-    if not t or t[0] in '{["tfn-' or t[0].isdigit():
-        return s
-    starts = [i for i in (t.find("{"), t.find("[")) if i != -1]
-    if not starts:
-        return s
-    start = min(starts)
-    span = _balanced_span(t, start)
-    if span is None:
-        # unbalanced: take from first opener to end (pipeline will repair)
-        if len(t) > 100:
-            log.append({"layer": "layer1", "action": "extracted JSON from wrapper text", "position": start,
-                        "original": s, "replacement": t[start:]})
-            return t[start:]
-        return s
-    log.append({"layer": "layer1", "action": "extracted JSON from wrapper text", "position": start,
-                "original": s, "replacement": span})
-    return span
-
-
 # One alternation: a whole string literal is ONE match (consumed at
 # C speed), structural chars another; a bare trailing quote (the
 # unterminated-string case) falls through to the single-char branch.
@@ -294,10 +269,11 @@ def clean(s: str, log: list) -> str:
     s = remove_code_fences(s, log)
     s = remove_comments(s, log)
     s = extract_from_html(s, log)
-    # NOTE: prose extraction (extract_from_prose) is subsumed by the
-    # tolerant parser's garbage-skipping top level, which also preserves
-    # multiple JSON values embedded in wrapper text; calling it here
-    # would truncate multi-value prose to the first balanced span.
+    # NOTE: the reference's prose extraction (content_cleaning.ex:681-783,
+    # first balanced span of wrapper text) is subsumed by the tolerant
+    # parser's garbage-skipping top level, which also preserves multiple
+    # JSON values embedded in wrapper text; extracting here would
+    # truncate multi-value prose to the first balanced span.
     s = remove_trailing_wrapper_text(s, log)
     s = strip_trailing_dots(s, log)
     return s

@@ -36,22 +36,13 @@ def keep_expr(
     )
 
 
-def quality_filter(
-    docs: DataFrame,
-    with_quality_cols: bool = False,
-    with_actions: bool = True,
-    with_repairs: bool = False,
-) -> DataFrame:
+def quality_filter(docs: DataFrame, with_actions: bool = True) -> DataFrame:
     """Full pipeline.  Input: the web-page table; output adds
     ``repaired, ok, fast_path, n_repairs, layer_hits, lang_id, ppl,
     q_pass, scrubbed, keep`` (+ ``actions`` unless disabled — the
     per-doc action strings are the widest Arrow payload; drop them
-    when lineage detail isn't consumed downstream).  ``with_repairs``
-    additionally projects the full repair_action structs
-    (layer/action/position/original/replacement — reference
-    lib/json_remedy/layer_behaviour.ex:9-15); heaviest payload (layer-1
-    extractions carry the replaced span), for repair-rule audit jobs."""
-    repair_udf = make_repair_udf(with_repairs=with_repairs)
+    when lineage detail isn't consumed downstream)."""
+    repair_udf = make_repair_udf()
 
     text = F.col("text")
     repair_cols = [
@@ -64,14 +55,11 @@ def quality_filter(
     ]
     if with_actions:
         repair_cols.append(F.col("r.actions").alias("actions"))
-    if with_repairs:
-        repair_cols.append(F.col("r.repairs").alias("repairs"))
-    # one shared quality-kernel struct: passes_quality and the optional
-    # metric columns reference the SAME UDF expression, and Spark's
-    # ExtractPythonUDFs collects it with the repair UDF into ONE
-    # ArrowEvalPython node (both depend only on `text`)
+    # Spark's ExtractPythonUDFs collects the quality kernel with the
+    # repair UDF into ONE ArrowEvalPython node (both depend only on
+    # `text`)
     hof = quality.hof_metrics(text)
-    out = (
+    return (
         docs
         # JVM-side stages first: langid + regex quality fuse into the scan project
         .withColumn("lang_id", langid.detect_language(text))
@@ -85,10 +73,6 @@ def quality_filter(
             keep_expr(F.col("ok"), F.col("repaired"), F.col("lang_id"), F.col("ppl"), F.col("q_pass")),
         )
     )
-    if with_quality_cols:
-        for name, col in quality.quality_columns(text, hof=hof).items():
-            out = out.withColumn(name, col)
-    return out
 
 
 def salted_repartition(df: DataFrame, n_partitions: int, key: str = "url", salt_buckets: int = 16) -> DataFrame:

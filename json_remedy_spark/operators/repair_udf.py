@@ -58,7 +58,7 @@ REPAIR_SCHEMA = StructType(
 )
 
 
-def make_repair_udf(with_repairs: bool = False, **repair_opts):
+def make_repair_udf(with_repairs: bool = False):
     """Build the pandas UDF lazily (imports pandas on executors only).
 
     ``with_repairs`` adds the full repair_action structs to the output
@@ -66,14 +66,8 @@ def make_repair_udf(with_repairs: bool = False, **repair_opts):
     layer-1 extraction records carry the replaced span — for fence /
     prose extraction that is the whole input text, which would nearly
     double the Arrow transfer of every malformed doc in the hot
-    pipeline that doesn't consume per-fix diffs.
-
-    ``repair_opts`` forward to the kernel per batch — the reference's
-    per-call toggles (``fast_path_optimization``,
-    ``enable_object_merging``, ``enable_multiple_json_aggregation``,
-    ``enable_early_hardcoded_patterns``, ``strict_mode``,
-    ``normalize_escapes``; lib/json_remedy.ex:90,355,389,395) become
-    job-level config, captured in the UDF closure."""
+    pipeline that doesn't consume per-fix diffs.  The kernel runs with
+    its default toggles."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
@@ -104,7 +98,7 @@ def make_repair_udf(with_repairs: bool = False, **repair_opts):
         vals = texts.fillna("").tolist()
         ppl = score_texts(vals)
         for i, s in enumerate(vals):
-            r = _repair(s, **repair_opts)
+            r = _repair(s)
             out["ok"][i] = r.ok
             out["fast_path"][i] = r.fast_path
             out["repaired"][i] = r.repaired

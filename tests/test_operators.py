@@ -96,23 +96,6 @@ def test_multimodal_plumbing(spark):
     assert len(frames) == 2 * N_FRAMES
 
 
-def test_repair_udf_forwards_options(spark):
-    """Per-call kernel toggles reach the executors through the UDF
-    closure: multi-JSON aggregation off turns `[]{}` into `[]` vs an
-    error/second-doc drop difference observable in the output."""
-    from json_remedy_spark.operators.repair_udf import make_repair_udf
-
-    df = spark.createDataFrame([("{'a': 1}",)], ["text"])
-    on = df.select(make_repair_udf()(F.col("text")).alias("r")).select("r.repaired").first()[0]
-    strict = (
-        df.select(make_repair_udf(strict_mode=True)(F.col("text")).alias("r"))
-        .select("r.ok", "r.repaired")
-        .first()
-    )
-    assert on == '{"a":1}'
-    assert strict["ok"] is False  # strict mode: validate-only, no repair
-
-
 def test_checkpoint_resume(spark, tmp_path):
     from json_remedy_spark.operators.checkpoint import committed_buckets, run_with_checkpoints
 
@@ -996,7 +979,7 @@ def test_extended_gopher_c4_rules(spark):
             "i",
             F.round(quality.bullet_line_ratio(t), 4).alias("b"),
             F.round(quality.ellipsis_line_ratio(t), 4).alias("e"),
-            F.round(quality.quality_columns(t)["q_alpha_ratio"], 4).alias("a"),
+            F.round(quality.hof_metrics(t).getField("alpha_ratio"), 4).alias("a"),
             quality.has_lorem_ipsum(t).alias("l"),
         ).collect()
     }
@@ -1212,24 +1195,27 @@ def test_bounded_collect_row_cap_and_no_job_at_cap_zero(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_soft_dedup_sizes_from_driver_labels_parity(spark):
+def test_soft_dedup_sizes_from_driver_labels_parity(spark, monkeypatch):
     """r07: when the components fast path runs, soft_dedup_weights
     joins a broadcast LOCAL size table built from the union-find's
     driver labels instead of the corpus-wide groupBy + join-back.
-    Same rows as the star-algorithm run (which keeps the groupBy
-    path), including singleton weight 1.0."""
-    from json_remedy_spark.functions.dedup import soft_dedup_weights
+    Same rows as a run whose route probes all decline (the loop route
+    and the groupBy size path), including singleton weight 1.0."""
+    from json_remedy_spark.functions import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     fast = {
         (r["doc_id"], r["rep_id"], r["cluster_size"], r["weight"])
-        for r in soft_dedup_weights(docs, threshold=0.5).collect()
+        for r in dedup.soft_dedup_weights(docs, threshold=0.5).collect()
     }
+    monkeypatch.setattr(dedup, "bounded_collect", lambda df, cap: None)
+    plan = dedup.soft_dedup_weights(docs, threshold=0.5)
+    assert "LocalTableScan" not in plan._jdf.queryExecution().optimizedPlan().toString()
     slow = {
         (r["doc_id"], r["rep_id"], r["cluster_size"], r["weight"])
-        for r in soft_dedup_weights(docs, threshold=0.5, algorithm="star").collect()
+        for r in plan.collect()
     }
     assert fast == slow and fast
     assert any(sz > 1 for _, _, sz, _ in fast)  # real clusters present
@@ -1341,10 +1327,10 @@ def test_components_driver_fast_path_parity_and_routing(spark, case):
     assert "driver_union_find" not in loop_stats and loop_stats["rounds"] >= 1
 
 
-def test_star_components_match_min_label(spark):
-    """algorithm='star' (large-star/small-star, Kiveris et al.) is an
-    exact drop-in for min-label: identical labeling on chains, cliques,
-    mismatched closers, and singletons."""
+def test_components_routes_agree_on_graph_shapes(spark):
+    """The driver union-find (default route) and the distributed
+    min-label loop (collect_max_pairs=0) label chains, cliques,
+    mismatched closers and singletons identically."""
     from json_remedy_spark.functions.dedup import components_from_pairs
 
     ids = spark.createDataFrame([(i,) for i in range(40)], ["doc_id"])
@@ -1356,35 +1342,19 @@ def test_star_components_match_min_label(spark):
     )
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
 
-    def rows(alg):
-        return sorted(
-            tuple(r)
-            for r in components_from_pairs(ids, pairs, algorithm=alg).collect()
-        )
+    def rows(**kw):
+        return sorted(tuple(r) for r in components_from_pairs(ids, pairs, **kw).collect())
 
-    min_label, star = rows("min_label"), rows("star")
-    assert star == min_label
-    got = dict((d, r) for d, r, _ in star)
+    driver, loop = rows(), rows(collect_max_pairs=0)
+    assert driver == loop
+    got = dict((d, r) for d, r, _ in driver)
     assert got[9] == 0 and got[14] == 10 and got[33] == 30 and got[25] == 25
 
 
-def test_star_components_log_rounds_on_long_chain(spark):
-    """The point of the escape hatch: a 64-node path converges within
-    ~2*log2(n) alternating rounds, far under the diameter."""
-    from json_remedy_spark.functions.dedup import components_from_pairs
-
-    n = 64
-    ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
-    # min_label would need ~63 rounds; star must land well inside 14
-    rows = components_from_pairs(ids, pairs, max_iters=14, algorithm="star").collect()
-    assert all(r["rep_id"] == 0 for r in rows) and len(rows) == n
-
-
-def test_star_components_random_graph_parity(spark):
+def test_components_routes_agree_on_random_graphs(spark):
     """Seeded random graphs (mixed densities, isolated nodes, self
-    loops, duplicate/reversed edges) — star and min-label must agree
-    exactly on every one."""
+    loops, duplicate/reversed edges) — the driver union-find and the
+    distributed min-label loop must agree exactly on every one."""
     import random
 
     from json_remedy_spark.functions.dedup import components_from_pairs
@@ -1399,28 +1369,34 @@ def test_star_components_random_graph_parity(spark):
         ]
         edges += [(b, a) for a, b in edges[:5]]  # reversed duplicates
         pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        a = sorted(tuple(r) for r in components_from_pairs(ids, pairs, max_iters=60).collect())
+        a = sorted(tuple(r) for r in components_from_pairs(ids, pairs).collect())
         b = sorted(
             tuple(r)
-            for r in components_from_pairs(ids, pairs, algorithm="star").collect()
+            for r in components_from_pairs(
+                ids, pairs, max_iters=60, collect_max_pairs=0
+            ).collect()
         )
         assert a == b, f"seed {seed} diverged"
 
 
-def test_star_components_on_lsh_pair_graph(spark):
+def test_components_routes_agree_on_lsh_pair_graph(spark):
     """Parity on the real LSH->jaccard pair graph over the sf0.001
-    documents table — the dedup_components oracle inputs, through both
-    algorithms (VERDICT r3 #9)."""
-    from json_remedy_spark.functions.dedup import near_dup_components
+    documents table — the dedup_components oracle inputs, through the
+    driver union-find and the distributed loop (VERDICT r3 #9)."""
+    from json_remedy_spark.functions.dedup import components_from_pairs, lsh_verified_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
-    a = sorted(tuple(r) for r in near_dup_components(docs, threshold=0.5).collect())
+    ids = docs.select("doc_id")
+    pairs = lsh_verified_pairs(docs, threshold=0.5).persist()
+    stats: dict = {}
+    a = sorted(tuple(r) for r in components_from_pairs(ids, pairs, stats_out=stats).collect())
     b = sorted(
-        tuple(r)
-        for r in near_dup_components(docs, threshold=0.5, algorithm="star").collect()
+        tuple(r) for r in components_from_pairs(ids, pairs, collect_max_pairs=0).collect()
     )
+    pairs.unpersist()
+    assert stats.get("driver_union_find")
     assert a == b and any(not c for _, _, c in a)
 
 
@@ -2924,31 +2900,6 @@ def test_media_near_dup_pairs_and_pigeonhole(spark):
     assert ("u1", "u3") in pairs and 0 < pairs[("u1", "u3")] <= 3
     assert all(h <= 3 for h in pairs.values())
     assert not any("u4" in p for p in pairs)
-
-
-def test_star_components_round_count_adversarial_scale(spark):
-    """VERDICT r4 #10: the adversarial-skew drill at real edge count —
-    a 100k-edge path graph (the worst case for min-label: diameter =
-    n-1) through algorithm='star', with the stats_out hook pinning the
-    O(log n) round-complexity claim numerically.  spark.range keeps
-    the fixture distributed (no driver-side 100k-row createDataFrame).
-    """
-    from pyspark.sql import functions as F
-
-    from json_remedy_spark.functions.dedup import components_from_pairs
-
-    n = 100_001  # 100k edges, diameter 100k
-    ids = spark.range(n).select(F.col("id").alias("doc_id"))
-    pairs = spark.range(n - 1).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    )
-    stats: dict = {}
-    out = components_from_pairs(
-        ids, pairs, max_iters=48, algorithm="star", stats_out=stats
-    )
-    assert out.where("rep_id <> 0").count() == 0 and out.count() == n
-    # 2*ceil(log2(n)) + slack = 40; min-label would need 100k rounds
-    assert 2 <= stats["rounds"] <= 40, stats
 
 
 def test_candidate_pairs_hub_cap_semantics(spark):

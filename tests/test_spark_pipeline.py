@@ -60,15 +60,20 @@ def test_output_schema(spark, corpus):
 
 
 def test_with_repairs_projects_full_action_structs(spark, corpus):
-    """Opt-in lineage: with_repairs surfaces the reference's full
-    repair_action structs (layer/action/position/original/replacement);
-    the default path omits the field from the Arrow payload entirely."""
+    """Opt-in lineage: make_repair_udf(with_repairs=True) surfaces the
+    reference's full repair_action structs (layer/action/position/
+    original/replacement); the default UDF and the pipeline omit the
+    field from the Arrow payload entirely."""
     docs, _ = corpus
     import pyspark.sql.functions as F
 
+    from json_remedy_spark.operators.repair_udf import make_repair_udf
+
     assert "repairs" not in quality_filter(docs).columns
-    result = quality_filter(docs.limit(200), with_repairs=True)
-    assert "repairs" in result.columns
+    default = docs.limit(1).select(make_repair_udf()(F.col("text")).alias("r"))
+    assert "repairs" not in default.select("r.*").columns
+    out = make_repair_udf(with_repairs=True)(F.col("text"))
+    result = docs.limit(200).select(out["n_repairs"].alias("n_repairs"), out["repairs"].alias("repairs"))
     rows = result.where(F.col("n_repairs") > 0).select("repairs").head(5)
     assert rows
     for r in rows:
