@@ -3088,7 +3088,7 @@ def _fasttext_langid_sql() -> str:
         SELECT doc_id, substr(t, x.i, 2) AS bigram
         FROM lt, LATERAL (SELECT unnest(range(1, len(t))) AS i) x
       ),
-      w(bucket, w_de, w_en, w_fr) AS (VALUES {langid.hashed_langid_weights_values_sql()}),
+      w(bucket, w_de, w_en, w_fr) AS (VALUES {langid.weights_values_sql(langid.ft_weight_rows())}),
       bb AS (SELECT doc_id, ({bucket} % {langid.FT_BUCKETS}) AS bucket FROM bg),
       s AS (
         SELECT bb.doc_id,
@@ -3255,7 +3255,7 @@ def _quality_classifier_sql() -> str:
         SELECT doc_id, substr(t, x.i, 2) AS bigram
         FROM t0, LATERAL (SELECT unnest(range(1, len(t))) AS i) x
       ),
-      w(bucket, w_hi, w_lo) AS (VALUES {classifier.qc_weights_values_sql()}),
+      w(bucket, w_hi, w_lo) AS (VALUES {langid.weights_values_sql(classifier.qc_weight_rows())}),
       bb AS (SELECT doc_id, ({bucket} % {langid.FT_BUCKETS}) AS bucket FROM bg),
       s AS (
         SELECT bb.doc_id,

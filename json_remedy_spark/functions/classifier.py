@@ -16,11 +16,10 @@ C4/Gopher rule side; this is the model side.  Production pipelines run
 both (rules veto, model scores), which is what ``operators/pipeline``
 composes.
 
-Scale shape: scoring is one zero-shuffle mapInPandas sharing
-``langid.score_hashed_bigrams`` (vectorized utf-32 decode, per-batch
-distinct-bigram hashing); the label/margin are JVM column expressions
-on the integer scores, so everything downstream of the Arrow hop
-codegens.
+Scale shape: scoring is the shared zero-shuffle ``langid.hashed_scores``
+hop (vectorized utf-32 decode, per-batch distinct-bigram hashing); the
+label/margin are JVM column expressions on the integer scores, so
+everything downstream of the Arrow hop codegens.
 """
 
 from __future__ import annotations
@@ -31,9 +30,11 @@ from pyspark.sql import functions as F
 
 from json_remedy_spark.functions.langid import (
     FT_BUCKETS,
-    _ft_bucket,
-    load_ft_model,
-    score_hashed_bigrams,
+    bigram_buckets,
+    bucket_counts,
+    ft_head,
+    hashed_scores,
+    padded_word_rows,
 )
 
 # class order is the score-column order; sorted so a loaded artifact
@@ -57,36 +58,23 @@ _QC_WORDS = {
     ],
 }
 
-_QC_MODEL_CACHE: dict = {}
+# naive-Bayes training constants: add-alpha smoothing and the integer
+# quantization scale of the log-probability weights
+QC_ALPHA = 1.0
+QC_SCALE = 1000.0
 
 
 def qc_weight_rows() -> list[tuple[int, list[int]]]:
-    """Sparse weight table: (bucket, [w_hi, w_lo]) over padded-word
-    bigrams of the class inventories (same construction as
-    ``langid.ft_weight_rows`` so collisions behave identically)."""
-    acc: dict[int, list[int]] = {}
-    for ci, cls in enumerate(QC_CLASSES):
-        for word in _QC_WORDS[cls]:
-            s = f" {word} "
-            for i in range(len(s) - 1):
-                b = _ft_bucket(s[i : i + 2])
-                acc.setdefault(b, [0] * len(QC_CLASSES))[ci] += 1
-    return sorted(acc.items())
-
-
-def qc_weights_values_sql() -> str:
-    """The sparse weight table as a SQL VALUES list (bucket, w_hi,
-    w_lo) — inlined into the DuckDB oracle."""
-    rows = qc_weight_rows()
-    return ", ".join(f"({b}, {ws[0]}, {ws[1]})" for b, ws in rows)
+    """The built-in quality table: (bucket, [w_hi, w_lo]) over the
+    class inventories (``langid.padded_word_rows``, as for langid, so
+    collisions behave identically)."""
+    return padded_word_rows(_QC_WORDS, QC_CLASSES)
 
 
 def train_quality_classifier(
     labeled: DataFrame,
     label_col: str = "label",
     text_col: str = "text",
-    alpha: float = 1.0,
-    scale: float = 1000.0,
     handles: list | None = None,
 ) -> DataFrame:
     """Train the quality head IN-ENGINE — the DCLM bootstrap pattern
@@ -94,22 +82,23 @@ def train_quality_classifier(
     scores the crawl): per-class smoothed naive-Bayes log-probability
     weights over the SAME hashed char-bigram features the scorer uses,
 
-        w[b, c] = round(scale * ln((cnt[b,c] + alpha) /
-                                   (tot[c] + FT_BUCKETS * alpha)))
+        w[b, c] = round(QC_SCALE * ln((cnt[b,c] + QC_ALPHA) /
+                                      (tot[c] + FT_BUCKETS * QC_ALPHA)))
 
     quantized to integers so the trained table drops STRAIGHT into the
     existing bit-exact integer scorer (``quality_classifier`` via the
     ``export_ft_model`` parquet format — (bucket, lang, weight) long
-    form; class margin = scale x the doc log-likelihood ratio, class
-    priors omitted as a constant shift a threshold sweep absorbs).
+    form; class margin = QC_SCALE x the doc log-likelihood ratio,
+    class priors omitted as a constant shift a threshold sweep
+    absorbs).
 
     Scale shape (the trigram-LM story again): ONE vocabulary-bounded
     aggregation — each Arrow batch emits per-class bucket-count
     partials (<= classes x FT_BUCKETS rows), the corpus itself never
     shuffles, and the driver sees nothing (the weight grid is a
-    classes x FT_BUCKETS DataFrame).  Counting reuses the scoring
-    kernel with an identity weight table, so train and score cannot
-    disagree on tokenization, hashing, or collisions."""
+    classes x FT_BUCKETS DataFrame).  Counting bincounts the scorer's
+    own ``bigram_buckets``, so train and score cannot disagree on
+    tokenization, hashing, or collisions."""
     import numpy as np
 
     src = labeled.select(
@@ -117,14 +106,12 @@ def train_quality_classifier(
     )
 
     def gen(batches):
-        eye = np.eye(FT_BUCKETS, dtype=np.int64)
         for pdf in batches:
-            texts = pdf["t"].fillna("").tolist()
-            counts = score_hashed_bigrams(texts, eye)  # (n_texts, B) occurrence counts
-            ys = pdf["y"].to_numpy()
+            ids = bigram_buckets(pdf["t"].fillna("").tolist())
+            ys = pdf["y"].tolist()
             out = {"y": [], "bucket": [], "cnt": []}
             for cls in pd.unique(pdf["y"]):
-                m = counts[ys == cls].sum(axis=0)
+                m = bucket_counts([a for a, y in zip(ids, ys) if y == cls])
                 nz = np.nonzero(m)[0]
                 out["y"].extend([cls] * len(nz))
                 out["bucket"].extend(nz.tolist())
@@ -153,10 +140,10 @@ def train_quality_classifier(
         F.col("bucket"),
         F.col("y").alias("lang"),
         F.round(
-            F.lit(float(scale))
+            F.lit(QC_SCALE)
             * F.log(
-                (F.col("cnt") + F.lit(float(alpha)))
-                / (F.col("tot") + F.lit(float(alpha) * FT_BUCKETS))
+                (F.col("cnt") + F.lit(QC_ALPHA))
+                / (F.col("tot") + F.lit(QC_ALPHA * FT_BUCKETS))
             ),
             0,
         ).cast("long").alias("weight"),
@@ -180,72 +167,23 @@ def quality_classifier(
 
     The id keeps its input type (string url keys work), and
     ``extra_cols`` ride through the Arrow hop unchanged so a pipeline
-    can gate on the label without a join-back shuffle.
+    can gate on the label without a join-back shuffle
+    (``langid.hashed_scores``).
 
-    ``model_path``: trained-model drop-in, ``langid.export_ft_model``
-    parquet format shipped via SparkFiles; class names come from the
-    artifact (sorted), and the output score columns are ``s_<class>``.
+    ``model_path``: trained-model drop-in (``langid.ft_head``),
+    ``langid.export_ft_model`` parquet format; class names come from
+    the artifact (sorted), and the output score columns are
+    ``s_<class>``.
     """
-    import numpy as np
-
-    if model_path is None:
-        classes = QC_CLASSES
-        dense0 = np.zeros((FT_BUCKETS, len(classes)), dtype=np.int64)
-        for b, ws in qc_weight_rows():
-            dense0[b] = ws
-
-        def get_dense():
-            return dense0
-
-    else:
-        import os
-
-        _, classes = load_ft_model(model_path)
-        fname = os.path.basename(model_path)
-        docs.sparkSession.sparkContext.addFile(model_path)
-
-        def get_dense():
-            from pyspark import SparkFiles
-
-            if fname not in _QC_MODEL_CACHE:
-                _QC_MODEL_CACHE[fname] = load_ft_model(SparkFiles.get(fname))[0]
-            return _QC_MODEL_CACHE[fname]
-
-    cls_arr = list(classes)
-    extras = [c for c in extra_cols]
-    src = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.lower(F.col(text_col)).alias("t"),
-        *extras,
-    )
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    extra_fields = "".join(
-        f", {c} {src.schema[c].dataType.simpleString()}" for c in extras
-    )
-
-    def gen(batches):
-        dense = get_dense()
-        for pdf in batches:
-            texts = pdf["t"].fillna("").tolist()
-            scores = score_hashed_bigrams(texts, dense)
-            out = {"doc_id": pdf["doc_id"]}
-            for c in extras:
-                out[c] = pdf[c]
-            for ci, c in enumerate(cls_arr):
-                out[f"s_{c}"] = scores[:, ci]
-            yield pd.DataFrame(out)
-
-    schema = (
-        f"doc_id {id_type}{extra_fields}, "
-        + ", ".join(f"s_{c} long" for c in cls_arr)
-    )
-    scored = src.mapInPandas(gen, schema=schema)
-    if len(cls_arr) == 2:
-        a, b = (F.col(f"s_{c}") for c in cls_arr)
+    classes, weights = ft_head(docs, qc_weight_rows(), QC_CLASSES, model_path)
+    score_cols = [f"s_{c}" for c in classes]
+    scored = hashed_scores(docs, weights, score_cols, id_col, text_col, extra_cols)
+    if len(classes) == 2:
+        a, b = (F.col(c) for c in score_cols)
         return scored.select(
             "doc_id",
-            *extras,
-            *[f"s_{c}" for c in cls_arr],
+            *extra_cols,
+            *score_cols,
             (a - b).alias("margin"),
             F.when(a - b > 0, F.lit("high")).otherwise(F.lit("low")).alias("quality_label"),
         )

@@ -20,9 +20,10 @@ Spark-first shape (10^12-doc honest):
   per Arrow batch) + one groupBy over <= B keys — the shuffle is
   O(partitions x B), never O(corpus).
 - the log-ratio table (B float64s) is built driver-side from the two
-  tiny histograms and closure-captured into the scoring kernel — the
-  SAME ``score_hashed_bigrams`` kernel as the langid and classifier
-  heads (one vectorized Arrow hop, no join, no per-row Python).
+  tiny histograms and closure-captured into the scoring hop — the
+  SAME ``langid.hashed_scores`` hop as the langid and classifier
+  heads (one vectorized Arrow hop, no join, no per-row Python); the
+  histograms bincount the same ``langid.bigram_buckets`` features.
 - selection: deterministic Gumbel keys from portable md5 noise and
   ``orderBy(key).limit(n)`` — Spark plans TakeOrderedAndProject
   (per-partition top-n + driver merge), no global sort.
@@ -42,44 +43,24 @@ from pyspark.sql import functions as F
 
 from json_remedy_spark.functions.langid import (
     FT_BUCKETS,
-    _ft_bucket,
-    score_hashed_bigrams,
+    bigram_buckets,
+    bucket_counts,
+    hashed_scores,
 )
 
 DSIR_K = 0.5  # add-k smoothing for both unigram bucket models
 
 
-def _batch_bucket_counts(texts: list[str], n_buckets: int) -> np.ndarray:
-    """Occurrence histogram over md5 buckets of char bigrams for one
-    Arrow batch — the counting twin of ``score_hashed_bigrams`` (same
-    utf-32 decode, same per-DISTINCT-bigram md5)."""
-    code_arrays = [np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32) for t in texts]
-    bigram_codes = [
-        a[:-1].astype(np.int64) * 0x200000 + a[1:] if len(a) >= 2
-        else np.empty(0, dtype=np.int64)
-        for a in code_arrays
-    ]
-    counts = np.zeros(n_buckets, dtype=np.int64)
-    if not bigram_codes or not any(len(c) for c in bigram_codes):
-        return counts
-    uniq, occ = np.unique(np.concatenate(bigram_codes), return_counts=True)
-    for code, n in zip(uniq, occ):
-        c0, c1 = divmod(int(code), 0x200000)
-        counts[_ft_bucket(chr(c0) + chr(c1))] += int(n)
-    return counts
-
-
-def bigram_bucket_counts(
-    docs: DataFrame, text_col: str = "text", n_buckets: int = FT_BUCKETS
-) -> DataFrame:
+def bigram_bucket_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus-level ``(bucket, cnt)`` histogram of hashed char bigrams
-    of ``lower(text)``.  Each task emits <= ``n_buckets`` partial rows;
-    the groupBy aggregates <= ``n_buckets`` keys."""
+    of ``lower(text)``.  Each task emits <= FT_BUCKETS partial rows
+    (``bucket_counts`` of the batch's ``bigram_buckets``); the groupBy
+    aggregates <= FT_BUCKETS keys."""
     src = docs.select(F.lower(F.col(text_col)).alias("t"))
 
     def gen(batches):
         for pdf in batches:
-            counts = _batch_bucket_counts(pdf["t"].fillna("").tolist(), n_buckets)
+            counts = bucket_counts(bigram_buckets(pdf["t"].fillna("").tolist()))
             nz = np.nonzero(counts)[0]
             yield pd.DataFrame(
                 {"bucket": nz.astype(np.int64), "cnt": counts[nz]}
@@ -89,18 +70,14 @@ def bigram_bucket_counts(
     return part.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
 
-def dsir_log_ratio(
-    target_counts: DataFrame,
-    raw_counts: DataFrame,
-    n_buckets: int = FT_BUCKETS,
-    k: float = DSIR_K,
-) -> np.ndarray:
+def dsir_log_ratio(target_counts: DataFrame, raw_counts: DataFrame) -> np.ndarray:
     """Dense float64 ``log p(b) - log q(b)`` vector from the two
-    histograms (driver-side: each input is <= ``n_buckets`` rows).
-    Add-k smoothing keeps unseen buckets finite in both models."""
+    histograms (driver-side: each input is <= FT_BUCKETS rows).
+    Add-``DSIR_K`` smoothing keeps unseen buckets finite in both
+    models."""
 
     def dense(df: DataFrame) -> np.ndarray:
-        v = np.zeros(n_buckets, dtype=np.float64)
+        v = np.zeros(FT_BUCKETS, dtype=np.float64)
         for r in df.collect():
             v[r["bucket"]] = r["cnt"]
         return v
@@ -113,8 +90,9 @@ def dsir_log_ratio(
     with ThreadPoolExecutor(2) as ex:
         fp, fq = ex.submit(dense, target_counts), ex.submit(dense, raw_counts)
         p, q = fp.result(), fq.result()
-    lp = np.log(p + k) - np.log(p.sum() + k * n_buckets)
-    lq = np.log(q + k) - np.log(q.sum() + k * n_buckets)
+    k = DSIR_K
+    lp = np.log(p + k) - np.log(p.sum() + k * FT_BUCKETS)
+    lq = np.log(q + k) - np.log(q.sum() + k * FT_BUCKETS)
     return lp - lq
 
 
@@ -132,11 +110,11 @@ def save_log_ratio(log_ratio: np.ndarray, path: str) -> None:
     )
 
 
-def load_log_ratio(path: str, n_buckets: int = FT_BUCKETS) -> np.ndarray:
+def load_log_ratio(path: str) -> np.ndarray:
     import pyarrow.parquet as pq
 
     t = pq.read_table(path).to_pydict()
-    lr = np.zeros(n_buckets, dtype=np.float64)
+    lr = np.zeros(FT_BUCKETS, dtype=np.float64)
     lr[np.asarray(t["bucket"], dtype=np.int64)] = t["log_ratio"]
     return lr
 
@@ -146,64 +124,24 @@ def dsir_weights(
     target: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = FT_BUCKETS,
-    k: float = DSIR_K,
     log_ratio: np.ndarray | None = None,
-    extra_cols: tuple = (),
-    raw_histogram_pct: int | None = None,
 ) -> DataFrame:
-    """Per-doc DSIR importance log-weight:
-    ``(doc_id, *extra_cols, weight)``.
+    """Per-doc DSIR importance log-weight: ``(doc_id, weight)``.
 
     Pass either ``target`` (the histograms + log-ratio are computed
     here: two tiny aggregate jobs, then one scoring pass) or a
     precomputed ``log_ratio`` vector (the at-rest form — a production
     run fits the ratio once on samples and reuses it across dumps).
-    ``raw_histogram_pct`` fits the raw-side model q on a deterministic
-    md5 id-sample instead of the full corpus — at 10^12 docs the
-    histogram needs ~10^6 docs to converge, so an extra full pass
-    just to count bigrams is waste; the scoring pass still covers
-    every doc.  The id keeps its input type; ``extra_cols`` ride
-    through the Arrow hop so a pipeline can gate on the weight
-    without a join-back."""
+    The id keeps its input type."""
     if log_ratio is None:
         if target is None:
             raise ValueError("dsir_weights needs target or log_ratio")
-        raw_for_hist = raw
-        if raw_histogram_pct is not None:
-            from json_remedy_spark.functions.corpus import hash_mod_bucket
-
-            raw_for_hist = raw.where(
-                hash_mod_bucket(F.col(id_col)) < raw_histogram_pct
-            )
         log_ratio = dsir_log_ratio(
-            bigram_bucket_counts(target, text_col, n_buckets),
-            bigram_bucket_counts(raw_for_hist, text_col, n_buckets),
-            n_buckets,
-            k,
+            bigram_bucket_counts(target, text_col),
+            bigram_bucket_counts(raw, text_col),
         )
-    dense = np.asarray(log_ratio, dtype=np.float64).reshape(-1, 1)
-    extras = list(extra_cols)
-    src = raw.select(
-        F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("t"), *extras
-    )
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    extra_fields = "".join(
-        f", {c} {src.schema[c].dataType.simpleString()}" for c in extras
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            scores = score_hashed_bigrams(pdf["t"].fillna("").tolist(), dense)
-            out = {"doc_id": pdf["doc_id"]}
-            for c in extras:
-                out[c] = pdf[c]
-            out["weight"] = scores[:, 0]
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        gen, schema=f"doc_id {id_type}{extra_fields}, weight double"
-    )
+    weights = np.asarray(log_ratio, dtype=np.float64).reshape(-1, 1)
+    return hashed_scores(raw, weights, ["weight"], id_col, text_col)
 
 
 def gumbel_key(

@@ -42,7 +42,7 @@ def detect_language(text: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# fastText-style hashed char-bigram linear classifier
+# fastText-style hashed char-bigram linear head
 # --------------------------------------------------------------------------
 #
 # The real fastText langid is a linear model over HASHED bag-of-char-
@@ -55,11 +55,19 @@ def detect_language(text: Column) -> Column:
 # replacing ft_weight_rows() with the exported table; nothing else
 # changes.
 #
+# One head serves three models: this langid, the quality classifier
+# (functions/classifier.py) and DSIR (functions/dsir.py).  They share
+# the featurizer (``bigram_buckets``) and the scoring hop
+# (``hashed_scores``); the two integer heads also share the
+# padded-word weight rows, their SQL VALUES form and the model loader
+# (``ft_head``).  Scoring a doc is ``weights[ids].sum(axis=0)``;
+# counting a corpus is ``bucket_counts`` (one ``np.bincount``).
+#
 # Scale shape: scoring is one zero-shuffle mapInPandas; per Arrow
 # batch the texts are decoded to uint32 codepoint arrays (vectorized
 # utf-32 view, no per-char Python), bigrams md5-bucketed once per
 # DISTINCT bigram in the batch, and per-doc scores are one fancy-index
-# + sum.  The weight matrix (n_langs x FT_BUCKETS) broadcasts inside
+# + sum.  The weight matrix (FT_BUCKETS x n_classes) broadcasts inside
 # the closure.
 
 FT_BUCKETS = 256
@@ -71,24 +79,79 @@ _STOPWORDS = {
 }
 
 
-def _ft_bucket(bigram: str) -> int:
+def bigram_buckets(texts):
+    """Each text's hashed char-bigram features: an int64 array of
+    bucket ids, one per bigram ``t[i:i+2]`` in position order (empty
+    for texts under two chars).  A bigram's bucket is the first 8 hex
+    digits of md5(utf-8 bigram) mod FT_BUCKETS — the DuckDB oracles'
+    formula.  One vectorized utf-32 decode per text (no per-char
+    Python); each DISTINCT bigram of the batch is hashed once."""
     import hashlib
 
-    return int(hashlib.md5(bigram.encode("utf-8")).hexdigest()[:8], 16) % FT_BUCKETS
+    import numpy as np
+    import pandas as pd
+
+    codes = [np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32) for t in texts]
+    bigram_codes = [a[:-1].astype(np.int64) * 0x200000 + a[1:] for a in codes]
+    # hash-factorize: one O(n) pass, ~2x np.unique + searchsorted
+    inv, uniq = pd.factorize(np.concatenate([np.empty(0, np.int64), *bigram_codes]))
+    buckets = np.empty(len(uniq), dtype=np.int64)
+    for j, code in enumerate(uniq.tolist()):
+        c0, c1 = divmod(code, 0x200000)
+        digest = hashlib.md5((chr(c0) + chr(c1)).encode("utf-8")).hexdigest()
+        buckets[j] = int(digest[:8], 16) % FT_BUCKETS
+    flat = buckets[inv]
+    ends = np.cumsum([len(c) for c in bigram_codes], dtype=np.int64)
+    return [flat[e - len(c) : e] for c, e in zip(bigram_codes, ends)]
+
+
+def score_hashed_bigrams(texts, weights):
+    """texts -> [n_texts x n_classes] scores against a dense
+    [FT_BUCKETS x n_classes] weight table: each doc's score row is
+    ``weights[ids].sum(axis=0)`` over its ``bigram_buckets``.  The
+    dtype follows the table: integer heads (langid, classifier) stay
+    bit-exact, float heads (DSIR log-ratios) flow through unchanged."""
+    import numpy as np
+
+    scores = np.zeros((len(texts), weights.shape[1]), dtype=weights.dtype)
+    for i, ids in enumerate(bigram_buckets(texts)):
+        if len(ids):
+            scores[i] = weights[ids].sum(axis=0)
+    return scores
+
+
+def bucket_counts(ids):
+    """FT_BUCKETS-long occurrence histogram of ``bigram_buckets``
+    output (any list of bucket-id arrays, empty included)."""
+    import numpy as np
+
+    return np.bincount(np.concatenate([np.empty(0, np.int64), *ids]), minlength=FT_BUCKETS)
+
+
+def padded_word_rows(words: dict[str, list[str]], classes: list[str]) -> list[tuple[int, list[int]]]:
+    """Sparse weight table ``(bucket, [w per class])``: a class's
+    weight in a bucket counts the bigrams of its space-padded words
+    that hash there (the padding makes word-boundary bigrams like
+    ' t' / 'e ' carry signal).  Only touched buckets are listed."""
+    import numpy as np
+
+    dense = np.stack(
+        [bucket_counts(bigram_buckets([f" {w} " for w in words[c]])) for c in classes],
+        axis=1,
+    )
+    return [(int(b), dense[b].tolist()) for b in np.flatnonzero(dense.any(axis=1))]
 
 
 def ft_weight_rows() -> list[tuple[int, list[int]]]:
-    """Sparse weight table: (bucket, [w_de, w_en, w_fr]) for every
-    bucket touched by a stopword bigram (words padded with spaces, so
-    word-boundary bigrams like ' t' / 'e ' carry signal)."""
-    acc: dict[int, list[int]] = {}
-    for li, lang in enumerate(FT_LANGS):
-        for word in _STOPWORDS[lang]:
-            s = f" {word} "
-            for i in range(len(s) - 1):
-                b = _ft_bucket(s[i : i + 2])
-                acc.setdefault(b, [0] * len(FT_LANGS))[li] += 1
-    return sorted(acc.items())
+    """The built-in langid table: (bucket, [w_de, w_en, w_fr]) over
+    the stopword inventory."""
+    return padded_word_rows(_STOPWORDS, FT_LANGS)
+
+
+def weights_values_sql(rows) -> str:
+    """A sparse weight table as a SQL VALUES list (bucket, w_0, w_1,
+    ...) — inlined into the DuckDB oracles."""
+    return ", ".join(f"({b}, {', '.join(str(w) for w in ws)})" for b, ws in rows)
 
 
 def export_ft_model(path: str, rows=None, langs=None) -> int:
@@ -112,8 +175,8 @@ def export_ft_model(path: str, rows=None, langs=None) -> int:
     return len(b_out)
 
 
-def load_ft_model(path: str, n_buckets: int = FT_BUCKETS):
-    """Read an exported weight table -> (dense [n_buckets x n_langs]
+def load_ft_model(path: str):
+    """Read an exported weight table -> (dense [FT_BUCKETS x n_langs]
     int64 matrix, sorted langs)."""
     import numpy as np
     import pyarrow.parquet as pq
@@ -121,128 +184,99 @@ def load_ft_model(path: str, n_buckets: int = FT_BUCKETS):
     t = pq.read_table(path).to_pydict()
     langs = sorted(set(t["lang"]))
     idx = {l: i for i, l in enumerate(langs)}
-    dense = np.zeros((n_buckets, len(langs)), dtype=np.int64)
+    dense = np.zeros((FT_BUCKETS, len(langs)), dtype=np.int64)
     for bucket, lang, w in zip(t["bucket"], t["lang"], t["weight"]):
         dense[int(bucket), idx[lang]] += int(w)
     return dense, langs
 
 
-# per-executor-process model cache: the weight table is loaded from the
-# SparkFiles-shipped artifact once per worker, not once per Arrow batch
-_FT_MODEL_CACHE: dict = {}
-
-
-def score_hashed_bigrams(texts, dense):
-    """The shared fastText scoring kernel: texts -> int64 score matrix
-    [n_texts x n_classes] against a dense [n_buckets x n_classes]
-    weight table.  One vectorized utf-32 decode per text (no per-char
-    Python), each DISTINCT bigram in the batch md5-bucketed once, then
-    a fancy-index + sum per doc.  Used by both the langid head and the
-    quality-classifier head (functions/classifier.py)."""
-    import hashlib
-
+def ft_head(docs, rows, classes, model_path: str | None):
+    """``(classes, weights)`` of an integer fastText head for
+    ``hashed_scores``: the built-in sparse ``rows`` as a dense table,
+    or — the trained-model drop-in — the ``export_ft_model`` artifact
+    at ``model_path``, whose classes (sorted) are read on the driver
+    and whose weights ship to the executors (``localdf.shipped``)."""
     import numpy as np
 
-    n_buckets, n_classes = dense.shape
-    code_arrays = [
-        np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32) for t in texts
-    ]
-    bigram_codes = [
-        a[:-1].astype(np.int64) * 0x200000 + a[1:] if len(a) >= 2
-        else np.empty(0, dtype=np.int64)
-        for a in code_arrays
-    ]
-    if bigram_codes and any(len(c) for c in bigram_codes):
-        uniq = np.unique(np.concatenate(bigram_codes))
-    else:
-        uniq = np.empty(0, dtype=np.int64)
-    buckets = np.empty(len(uniq), dtype=np.int64)
-    for j, code in enumerate(uniq):
-        c0, c1 = divmod(int(code), 0x200000)
-        bg = chr(c0) + chr(c1)
-        buckets[j] = (
-            int(hashlib.md5(bg.encode("utf-8")).hexdigest()[:8], 16) % n_buckets
-        )
-    # dtype follows the weight table: int64 heads (langid/classifier)
-    # stay bit-exact, float64 heads (DSIR log-ratios) flow through the
-    # same kernel unchanged
-    uniq_w = dense[buckets] if len(uniq) else np.empty((0, n_classes), dense.dtype)
-    scores = np.zeros((len(texts), n_classes), dtype=dense.dtype)
-    for i, codes in enumerate(bigram_codes):
-        if len(codes):
-            scores[i] = uniq_w[np.searchsorted(uniq, codes)].sum(axis=0)
-    return scores
+    from json_remedy_spark.localdf import shipped
+
+    if model_path is None:
+        dense = np.zeros((FT_BUCKETS, len(classes)), dtype=np.int64)
+        for b, ws in rows:
+            dense[b] = ws
+        return list(classes), dense
+    _, classes = load_ft_model(model_path)
+    sc = docs.sparkSession.sparkContext
+    return classes, shipped(sc, [model_path], lambda p: load_ft_model(p)[0])
+
+
+def hashed_scores(
+    docs,
+    weights,
+    score_cols: list[str],
+    id_col: str,
+    text_col: str,
+    extra_cols: tuple = (),
+):
+    """The one hashed-bigram scoring hop: ``(doc_id, *extra_cols,
+    *score_cols)``, where score column j of a doc is
+    ``score_hashed_bigrams(lower(text), weights)[:, j]``.
+
+    ``weights`` is the dense [FT_BUCKETS x len(score_cols)] table, or a
+    zero-arg getter that returns it on the worker (a shipped
+    ``ft_head`` model, always int64).  Float tables give double
+    scores, integer tables long scores.
+
+    The id keeps its input type (url keys work), and ``extra_cols``
+    ride through the Arrow hop unchanged, so a pipeline can gate on a
+    score without a join-back shuffle.  One zero-shuffle mapInPandas;
+    heads add their label columns as JVM expressions on top."""
+    import pandas as pd
+
+    get = weights if callable(weights) else (lambda: weights)
+    score_type = "long" if callable(weights) or weights.dtype.kind == "i" else "double"
+    keep = ["doc_id", *extra_cols]
+    src = docs.select(
+        F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("t"), *extra_cols
+    )
+    schema = ", ".join(
+        [f"{c} {src.schema[c].dataType.simpleString()}" for c in keep]
+        + [f"{c} {score_type}" for c in score_cols]
+    )
+
+    def gen(batches):
+        w = get()
+        for pdf in batches:
+            scores = score_hashed_bigrams(pdf["t"].fillna("").tolist(), w)
+            out = {c: pdf[c] for c in keep}
+            for j, c in enumerate(score_cols):
+                out[c] = scores[:, j]
+            yield pd.DataFrame(out)
+
+    return src.mapInPandas(gen, schema=schema)
 
 
 def hashed_langid(docs, id_col: str = "doc_id", text_col: str = "text", model_path: str | None = None):
     """fastText-architecture language ID: (doc_id, ft_lang, s_de,
     s_en, s_fr).  Integer scores -> bit-exact DuckDB oracle (explode
     bigrams, md5-bucket, join the same sparse weight table, sum).
+    ``ft_lang`` is the first top-scoring language, 'xx' when no score
+    is positive.
 
-    ``model_path`` is the trained-model drop-in (VERDICT r3 #7): an
-    exported weight table (``export_ft_model`` format) shipped to
-    executors via ``SparkFiles``; languages and weights then come from
-    the artifact.  Distinct models must use distinct basenames —
-    ``sc.addFile`` keys shipped artifacts by filename.  Default: the
-    built-in deterministic table, closure-captured (it is tiny)."""
-    import numpy as np
-    import pandas as pd
-
-    if model_path is None:
-        langs = FT_LANGS
-        dense0 = np.zeros((FT_BUCKETS, len(langs)), dtype=np.int64)
-        for b, ws in ft_weight_rows():
-            dense0[b] = ws
-
-        def get_dense():
-            return dense0
-
-    else:
-        import os
-
-        # driver reads langs (schema depends on them); workers load
-        # weights from the shipped copy
-        _, langs = load_ft_model(model_path)
-        fname = os.path.basename(model_path)
-        docs.sparkSession.sparkContext.addFile(model_path)
-
-        def get_dense():
-            from pyspark import SparkFiles
-
-            if fname not in _FT_MODEL_CACHE:
-                _FT_MODEL_CACHE[fname] = load_ft_model(SparkFiles.get(fname))[0]
-            return _FT_MODEL_CACHE[fname]
-
-    n_langs = len(langs)
-    langs_arr = list(langs)
-
-    src = docs.select(F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("t"))
-
-    def gen(batches):
-        dense = get_dense()
-        for pdf in batches:
-            texts = pdf["t"].fillna("").tolist()
-            scores = score_hashed_bigrams(texts, dense)
-            best = scores.argmax(axis=1)
-            lang = np.where(
-                scores.max(axis=1, initial=0) > 0,
-                np.array(langs_arr, dtype=object)[best],
-                "xx",
-            )
-            out = {"doc_id": pdf["doc_id"], "ft_lang": lang}
-            for li, l in enumerate(langs_arr):
-                out[f"s_{l}"] = scores[:, li]
-            yield pd.DataFrame(out)
-
-    schema = "doc_id long, ft_lang string, " + ", ".join(f"s_{l} long" for l in langs_arr)
-    return src.mapInPandas(gen, schema=schema)
-
-
-def hashed_langid_weights_values_sql() -> str:
-    """The sparse weight table as a SQL VALUES list (bucket, w_de,
-    w_en, w_fr) — inlined into the DuckDB oracle."""
-    rows = ft_weight_rows()
-    return ", ".join(f"({b}, {ws[0]}, {ws[1]}, {ws[2]})" for b, ws in rows)
+    ``model_path`` is the trained-model drop-in (``ft_head``): an
+    exported weight table (``export_ft_model`` format); languages and
+    weights then come from the artifact.  Default: the built-in
+    deterministic table, closure-captured (it is tiny)."""
+    langs, weights = ft_head(docs, ft_weight_rows(), FT_LANGS, model_path)
+    s = [F.col(f"s_{l}") for l in langs]
+    scored = hashed_scores(docs, weights, [f"s_{l}" for l in langs], id_col, text_col)
+    best = F.greatest(*s) if len(s) > 1 else s[0]
+    lang = F.lit("xx")
+    for l, c in reversed(list(zip(langs, s))):
+        lang = F.when(c == best, F.lit(l)).otherwise(lang)
+    return scored.select(
+        "doc_id", F.when(best > 0, lang).otherwise(F.lit("xx")).alias("ft_lang"), *s
+    )
 
 
 def detect_language_sql(col: str = "text") -> str:

@@ -113,16 +113,12 @@ def score_texts(texts, logp: np.ndarray | None = None) -> np.ndarray:
     return out
 
 
-# per-executor-process model cache (SparkFiles artifact -> dense table)
-_PPL_MODEL_CACHE: dict = {}
-
-
 def make_perplexity_udf(model_paths: tuple[str, str] | None = None):
     """Scoring UDF.  ``model_paths=(tri_parquet, bi_parquet)`` is the
     trained-model drop-in (VERDICT r3 #7): the sparse tables ship to
-    executors via ``SparkFiles`` and workers rebuild the dense log-prob
-    table once per process.  Distinct models need distinct basenames
-    (``sc.addFile`` keys by filename).  Default: the built-in model."""
+    executors (``localdf.shipped``) and workers rebuild the dense
+    log-prob table once per process.  Distinct models need distinct
+    basenames.  Default: the built-in model."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -134,27 +130,15 @@ def make_perplexity_udf(model_paths: tuple[str, str] | None = None):
 
         return perplexity
 
-    import os
-
     from pyspark.sql import SparkSession
 
-    tri_path, bi_path = model_paths
-    names = (os.path.basename(tri_path), os.path.basename(bi_path))
-    sc = SparkSession.active().sparkContext
-    sc.addFile(tri_path)
-    sc.addFile(bi_path)
+    from ..localdf import shipped
+
+    logp = shipped(SparkSession.active().sparkContext, model_paths, load_model_tables)
 
     @pandas_udf("double")
     def perplexity_model(texts: pd.Series) -> pd.Series:
-        from pyspark import SparkFiles
-
-        if names not in _PPL_MODEL_CACHE:
-            _PPL_MODEL_CACHE[names] = load_model_tables(
-                SparkFiles.get(names[0]), SparkFiles.get(names[1])
-            )
-        return pd.Series(
-            score_texts(texts.fillna("").tolist(), logp=_PPL_MODEL_CACHE[names])
-        )
+        return pd.Series(score_texts(texts.fillna("").tolist(), logp=logp()))
 
     return perplexity_model
 
@@ -333,29 +317,24 @@ def load_trigram_counts(path: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def make_kn_perplexity_udf(counts_path: str):
-    """KN-smoothed scoring UDF: the sparse counts ship via SparkFiles
-    and each worker process builds the dense KN table once (cached by
-    basename).  Same scoring kernel / plan shape as the add-k UDF."""
-    import os
-
+    """KN-smoothed scoring UDF: the sparse counts ship to executors
+    (``localdf.shipped``) and each worker process builds the dense KN
+    table once.  Same scoring kernel / plan shape as the add-k UDF."""
     import pandas as pd
     from pyspark.sql import SparkSession
     from pyspark.sql.functions import pandas_udf
 
-    name = os.path.basename(counts_path)
-    SparkSession.active().sparkContext.addFile(counts_path)
+    from ..localdf import shipped
+
+    logp = shipped(
+        SparkSession.active().sparkContext,
+        [counts_path],
+        lambda p: kn_logp_from_counts(*load_trigram_counts(p)),
+    )
 
     @pandas_udf("double")
     def kn_perplexity(texts: pd.Series) -> pd.Series:
-        from pyspark import SparkFiles
-
-        key = ("kn", name)
-        if key not in _PPL_MODEL_CACHE:
-            tri, c = load_trigram_counts(SparkFiles.get(name))
-            _PPL_MODEL_CACHE[key] = kn_logp_from_counts(tri, c)
-        return pd.Series(
-            score_texts(texts.fillna("").tolist(), logp=_PPL_MODEL_CACHE[key])
-        )
+        return pd.Series(score_texts(texts.fillna("").tolist(), logp=logp()))
 
     return kn_perplexity
 

@@ -13,14 +13,17 @@ the same rows through a pandas DataFrame instead produces an
 Arrow-backed LocalRelation: the data lives in the JVM from the
 start, no Python worker runs anywhere downstream, and the write is
 ~0.2 s.  Values are bit-identical (doubles cross as IEEE 8-byte
-values either way; verified in tools/r07 microbenches and by the
-unchanged DuckDB oracle hashes).
+values either way; the DuckDB oracle hashes did not change when the
+query-panel tables moved to this path).
 
 Contract: ``rows`` must not contain None cells (the call sites here
 never do); pass an explicit DDL schema so Arrow casts deterministically.
 
 The reverse direction has one rule too: every threshold-routed driver
 fast path decides its route with ``bounded_collect``.
+
+Driver FILES reach the executors one way: ``shipped`` (a trained
+model artifact, loaded once per worker process).
 """
 
 from __future__ import annotations
@@ -79,3 +82,41 @@ def bounded_collect(df, cap: int):
         return None
     pdf = df.limit(cap + 1).toPandas()
     return pdf if len(pdf) <= cap else None
+
+
+# per-worker-process cache of shipped artifacts, keyed by loader and
+# basenames (see ``shipped``)
+_SHIPPED: dict = {}
+
+
+def _load_shipped(key, names, load):
+    if key not in _SHIPPED:
+        from pyspark import SparkFiles
+
+        _SHIPPED[key] = load(*(SparkFiles.get(n) for n in names))
+    return _SHIPPED[key]
+
+
+def shipped(sc, paths, load):
+    """Ship driver files to every executor (``sc.addFile``) and return
+    a zero-arg getter for use inside a UDF or mapInPandas body: on a
+    worker it returns ``load(*local_paths)``, computed once per Python
+    worker process, not once per task or Arrow batch.
+
+    The getter is a ``functools.partial`` over the module-level
+    ``_load_shipped`` on purpose: cloudpickle ships a nested function
+    by value together with a COPY of the module globals it reads, so a
+    cache reached from a closure starts empty in every task.
+
+    ``sc.addFile`` keys shipped files by basename, so distinct models
+    need distinct basenames.  The cache key is the loader's qualified
+    name plus the basenames — define each ``load`` (a lambda is fine)
+    at its own site."""
+    import functools
+    import os
+
+    names = tuple(os.path.basename(p) for p in paths)
+    for p in paths:
+        sc.addFile(p)
+    key = (load.__module__, load.__qualname__, names)
+    return functools.partial(_load_shipped, key, names, load)

@@ -84,16 +84,94 @@ def test_scoring_pass_is_map_only(corpus):
     assert "Exchange" not in plan, plan
 
 
-def test_histogram_matches_driver_side_count(corpus):
+def _ref_buckets(text):
+    """Plain per-position reference featurizer: md5 of each
+    ``text[i:i+2]``, first 8 hex digits, mod FT_BUCKETS."""
+    import hashlib
+
+    from json_remedy_spark.functions.langid import FT_BUCKETS
+
+    return [
+        int(hashlib.md5(text[i : i + 2].encode("utf-8")).hexdigest()[:8], 16)
+        % FT_BUCKETS
+        for i in range(len(text) - 1)
+    ]
+
+
+_EDGE_TEXTS = [
+    "",
+    "a",
+    "ab",
+    "aaaa",
+    "the quick brown fox jumps over the lazy dog",
+    "der schnelle braune fuchs springt über den faulen hund",
+    "emoji 😀😀 and astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text 🎉",
+    "😀",
+    "日本語のテキストと中文文本",
+    "русский текст и ελληνικά",
+    "عربي مع 123 digits",
+    "click subscribe free offer bonus because research study evidence",
+]
+
+
+def test_bigram_buckets_match_per_position_reference():
+    """Spark-free differential test of the one hashed-bigram featurizer:
+    bucket ids, integer and float scoring, and counting all equal a
+    plain per-position md5 reference."""
     import numpy as np
 
+    from json_remedy_spark.functions.classifier import qc_weight_rows
+    from json_remedy_spark.functions.langid import (
+        FT_BUCKETS,
+        bigram_buckets,
+        bucket_counts,
+        ft_weight_rows,
+        score_hashed_bigrams,
+    )
+
+    texts = _EDGE_TEXTS + [t.upper() for t in _EDGE_TEXTS]
+    ref = [_ref_buckets(t) for t in texts]
+    got = bigram_buckets(texts)
+    assert [g.tolist() for g in got] == ref
+    assert bigram_buckets([]) == []
+    assert bucket_counts([]).tolist() == [0] * FT_BUCKETS
+
+    rng = np.random.default_rng(0)
+    tables = []
+    for rows in (ft_weight_rows(), qc_weight_rows()):
+        dense = np.zeros((FT_BUCKETS, len(rows[0][1])), dtype=np.int64)
+        for b, ws in rows:
+            dense[b] = ws
+        tables.append(dense)
+    tables.append(rng.normal(size=(FT_BUCKETS, 1)))
+    for w in tables:
+        scores = score_hashed_bigrams(texts, w)
+        assert scores.dtype == w.dtype
+        for i, ids in enumerate(ref):
+            want = sum((w[b] for b in ids), np.zeros(w.shape[1], w.dtype))
+            if w.dtype.kind == "i":
+                assert scores[i].tolist() == want.tolist(), texts[i]
+            else:
+                assert np.allclose(scores[i], want, rtol=0, atol=1e-12), texts[i]
+
+    counts = bucket_counts(got)
+    want = np.zeros(FT_BUCKETS, dtype=np.int64)
+    for ids in ref:
+        for b in ids:
+            want[b] += 1
+    assert counts.tolist() == want.tolist()
+
+
+def test_histogram_matches_driver_side_count(corpus):
     got = {
         r["bucket"]: r["cnt"] for r in dsir.bigram_bucket_counts(corpus).collect()
     }
     texts = [r["text"] for r in corpus.select(F.lower("text").alias("text")).collect()]
-    want = dsir._batch_bucket_counts([t or "" for t in texts], 256)
-    for b in range(256):
-        assert got.get(b, 0) == int(want[b]), b
+    want = {}
+    for t in texts:
+        for b in _ref_buckets(t or ""):
+            want[b] = want.get(b, 0) + 1
+    assert got == want
 
 
 # ---- fuzzy decontamination (bipartite LSH; functions/dedup.py) ----------
@@ -151,28 +229,6 @@ def test_fuzzy_decontaminate_eval_side_broadcasts(spark):
     assert "LocalTableScan" in fast_plan, fast_plan
     for h in handles + handles2:
         h.unpersist()
-
-
-def test_weights_with_sampled_raw_histogram(corpus):
-    from pyspark.sql import functions as F
-
-    from json_remedy_spark.functions import dsir
-
-    target = corpus.where((F.col("doc_id") % 3) == 0)
-    w = (
-        dsir.dsir_weights(corpus, target, raw_histogram_pct=50)
-        .toPandas()
-        .set_index("doc_id")["weight"]
-    )
-    # model fit on a half-sample still ranks the classes correctly
-    assert w[0] > w[2] > w[1]
-    # deterministic: same sample -> same weights
-    w2 = (
-        dsir.dsir_weights(corpus, target, raw_histogram_pct=50)
-        .toPandas()
-        .set_index("doc_id")["weight"]
-    )
-    assert (w.sort_index() == w2.sort_index()).all()
 
 
 def test_log_ratio_at_rest_roundtrip(corpus, tmp_path):

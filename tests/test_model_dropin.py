@@ -193,6 +193,21 @@ def test_quality_classifier_string_id_and_passthrough(spark):
     assert out["u://2"]["lang"] == "de" and "click" in out["u://2"]["text"]
 
 
+def test_hashed_langid_string_id(spark):
+    """url-keyed docs keep their string ids through the langid hop
+    (the same contract as the quality head above)."""
+    from json_remedy_spark.functions.langid import hashed_langid
+
+    d = spark.createDataFrame(
+        [("u://1", "the cat and the dog"), ("u://2", "der hund und die katze")],
+        ["url", "text"],
+    )
+    out = {r["doc_id"]: r for r in hashed_langid(d, id_col="url").collect()}
+    assert set(out) == {"u://1", "u://2"}
+    assert out["u://1"]["ft_lang"] == "en"
+    assert out["u://2"]["ft_lang"] == "de"
+
+
 def test_trained_lm_reproduces_builtin_model(spark, tmp_path):
     """Training on the exact corpus the built-in model was fit on
     (functions/perplexity._train_counts: each language's prose x3)

@@ -7,10 +7,11 @@ Prints one JSON line, directly comparable to
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from json_remedy_spark.kernel import repair  # noqa: E402
 

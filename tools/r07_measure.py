@@ -12,6 +12,7 @@ Usage:
   python tools/r07_measure.py --plans before q1 …  # also dump plans/r07/<q>_before.txt
   python tools/r07_measure.py --noop q1 …          # noop-sink isolation instead of consume()
   SPARK_GRAFT_SF_DIR=... overrides the data dir (default sf0.1)
+  SPARK_GRAFT_CPUS=N sets local[N] (default: the usable CPUs)
 """
 
 import json
@@ -22,7 +23,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# default: every CPU this process may run on (bench.py's make_spark
+# pins local[CPUS]); SPARK_GRAFT_CPUS overrides
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def main():
