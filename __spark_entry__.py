@@ -2510,11 +2510,16 @@ EXPORT_SCHEMAS: dict[str, str] = {
     _IVF_TOPK_EXPORT: "q_id BIGINT, vec_id BIGINT",
     _IVF_APPEND_EXPORT: "q_id BIGINT, vec_id BIGINT",
     _IVF_SQ8_EXPORT: "q_id BIGINT, vec_id BIGINT",
+    _IVF_PQ_EXPORT: "q_id BIGINT, vec_id BIGINT",
+    # ivf_pq_topk rebuilds its whole index dir in-query, so this
+    # placeholder never reaches what the query reads
+    os.path.join(_IVF_PQ_INDEX, "codebooks"): "sub INTEGER, code INTEGER, pos INTEGER, val BIGINT",
     _ANN_EXPORT: "method VARCHAR, q_id BIGINT, vec_id BIGINT",
     _SEMDEDUP_EXPORT: "vec_id BIGINT, cell INTEGER, keep BOOLEAN",
     _LAYER_HITS_EXPORT: "layer VARCHAR, hits INTEGER",
     _REPAIR_ACTIONS_EXPORT: "action VARCHAR",
     _BPE_MERGES_EXPORT: "rank BIGINT, a VARCHAR, b VARCHAR",
+    _BYTE_BPE_MERGES_EXPORT: "rank BIGINT, a VARCHAR, b VARCHAR",
     _PIPE_FUNNEL_EXPORT: "doc_id BIGINT, ok BOOLEAN, nonempty BOOLEAN",
     _REPAIR_DEBUG_EXPORT: "layer VARCHAR, status VARCHAR, repairs BIGINT",
 }

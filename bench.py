@@ -1,39 +1,70 @@
-"""Benchmark harness — one JSON line to stdout.
+"""Benchmark harness: the repo's one query timer and one session builder.
 
-Headline: the full quality-filter pipeline (synthetic web-page corpus
-sized to the sf dir) plus the driver-table operator queries.  Also
-runs the pipeline at two pinned parallelism levels (n/4 vs n usable
-cpus, capped at local[4] vs local[16]) to evidence the scaling criterion —
+    python bench.py              # full run; the LAST stdout line is the record
+    python bench.py q1 q2 ...    # best-of-2 of the named queries() only
+
+The full run times the quality-filter pipeline (synthetic web-page
+corpus sized to the sf dir), every ``__spark_entry__`` query, the prefix
+DAGs and the repair kernel's layers (perfbench/layers.py), and the
+pipeline at two pinned parallelism levels (n/4 vs n usable cpus, capped
+at local[4] vs local[16]) to evidence the scaling criterion --
 efficiency = best-vs-best docs/sec ratio across interleaved passes,
 reported beside a Spark-free multiprocessing ceiling of the same host.
+The line before the last one carries every query timing.
 
 Env:
   SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1
-  SPARK_GRAFT_CPUS     default 32
+  SPARK_GRAFT_CPUS     default: the usable cpus
   BENCH_SCALING=0      skip the scaling children for quick loops
                        (hosts with < 4 usable cpus report scaling as skipped)
 """
 
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+
+def usable_cpus() -> list[int]:
+    try:
+        return sorted(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return list(range(os.cpu_count() or 1))
+
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(usable_cpus()))
 RUN_SCALING = os.environ.get("BENCH_SCALING", "1") != "0"
 
 # corpus size scales with the sf dir (lineitem rows ~ 6M * sf)
 _SF_GUESS = {"sf0.001": 2_000, "sf0.01": 20_000, "sf0.1": 200_000}
 N_DOCS = _SF_GUESS.get(os.path.basename(SF_DIR.rstrip("/")), 20_000)
 
+# (family, name pattern): a query's timing counts toward the first
+# family whose pattern its name matches
+FAMILIES = (
+    ("media/events", r"media|frame|event|session"),
+    ("repair", r"repair|layer_hits"),
+    ("BM25/search", r"bm25"),
+    ("ANN", r"topk|ann_recall"),
+    ("dedup/verify", r"dup|simhash|minhash|lsh|jaccard|winnow|contaminat"),
+    ("tokenize/pack", r"bpe|token|pack|vocab|chunk"),
+    ("LM/perplexity", r"ppl|perplexity|_lm|langid|classifier|qc_|dsir|ngram"),
+    ("web graph", r"url|domain|link|anchor|robots|blocklist|html|page|host|main_content"),
+    ("corpus ops", r"funnel|sample|report|normalize|quality_stats|pii|keep_drop|script"),
+)
+N_SLOWEST = 8
 
-def make_spark(cores: int, app: str):
+
+def make_spark(cores: int = CPUS, app: str = "bench"):
     from pyspark.sql import SparkSession
 
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
@@ -45,6 +76,8 @@ def make_spark(cores: int, app: str):
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 _CORPUS_CACHE: dict[int, str] = {}
@@ -67,7 +100,7 @@ def corpus_parquet(spark, n_docs: int) -> str:
     return _CORPUS_CACHE[n_docs]
 
 
-def run_pipeline(spark, n_docs: int, partitions: int = 0) -> tuple[float, int]:
+def run_pipeline(spark, n_docs: int) -> tuple[float, int]:
     """Full DAG over the materialized corpus; returns (sec, kept_rows)."""
     from pyspark.sql import functions as F
 
@@ -87,14 +120,61 @@ def run_pipeline(spark, n_docs: int, partitions: int = 0) -> tuple[float, int]:
     return dt, agg["kept"]
 
 
-def run_query_suite(spark) -> dict:
-    """Times each driver query with an aggregate that CONSUMES every
-    output column — count() lets Spark prune deterministic pandas_udf
-    projections entirely (ADVICE r1), so map-only UDF queries would
-    otherwise measure scan+count, not the operator."""
-    from pyspark.sql import functions as F
+def _perfbench_layers():
+    path = os.path.join(ROOT, "perfbench")
+    if path not in sys.path:
+        sys.path.insert(0, path)
+    import layers
 
-    import __spark_entry__ as entry
+    return layers
+
+
+def prefix_times(spark, corpus_dir: str) -> dict:
+    """Noop-sink seconds of each quality-filter prefix DAG (perfbench's
+    ``prefix_frames``: scan, +langid, +repair/ppl UDF, +quality,
+    +scrub/keep) over the bench corpus; median per prefix over
+    interleaved rounds.  Reported cumulative: a layer taken as the
+    difference of two medians can read negative."""
+    layers = _perfbench_layers()
+    frames = layers.prefix_frames(spark.read.parquet(corpus_dir))
+    times: dict[str, list] = {name: [] for name, _ in frames}
+    for _ in range(layers.PREFIX_REPS):
+        for name, df in frames:
+            t0 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            times[name].append(time.time() - t0)
+    return {name: round(statistics.median(ts), 3) for name, ts in times.items()}
+
+
+def kernel_times(corpus_dir: str, n_docs: int) -> dict:
+    """µs/doc per repair-kernel layer (perfbench's ``kernel_layers``)
+    over an evenly spaced sample of the bench corpus, labelled by the
+    generator that wrote it."""
+    import pandas as pd
+
+    from json_remedy_spark.sources.webpages import make_row
+
+    layers = _perfbench_layers()
+    rows = [make_row(i) for i in range(0, n_docs, max(1, n_docs // layers.KERNEL_SAMPLE))]
+    labels = pd.DataFrame(rows)[["url", "expected_repaired"]]
+    return layers.kernel_layers({"corpus_dir": corpus_dir}, labels)
+
+
+def layers_block(prefix: dict, pipeline_s: float, kernel: dict) -> dict:
+    return {
+        "prefix_cum_s": prefix,
+        "prefix_over_pipeline": round(list(prefix.values())[-1] / pipeline_s, 3),
+        "kernel": {k: round(v, 3) for k, v in kernel.items() if "." in k},
+    }
+
+
+def run_query_suite(spark, queries: dict) -> dict:
+    """Times each of ``queries`` (name -> query function) with an
+    aggregate that CONSUMES every output column — count() lets Spark
+    prune deterministic pandas_udf projections entirely (ADVICE r1), so
+    map-only UDF queries would otherwise measure scan+count, not the
+    operator."""
+    from pyspark.sql import functions as F
 
     def consume(df):
         df.agg(F.sum(F.length(F.to_json(F.struct("*")))).alias("consumed")).collect()
@@ -104,7 +184,7 @@ def run_query_suite(spark) -> dict:
     consume(spark.range(1000).withColumn("x", F.col("id") * 2).repartition(8))
 
     timings = {}
-    for name, fn in entry.queries().items():
+    for name, fn in queries.items():
         # best-of-2: this host's CPU-steal spikes (CLAUDE.md) can hit a
         # single sub-second query for tens of seconds
         best = None
@@ -122,18 +202,64 @@ def run_query_suite(spark) -> dict:
     return timings
 
 
-def main():
-    results = {}
+def family_of(name: str) -> str:
+    return next((fam for fam, pat in FAMILIES if re.search(pat, name)), "other")
 
-    spark = make_spark(CPUS, "bench-main")
-    spark.sparkContext.setLogLevel("ERROR")
+
+def last_line(results: dict) -> str:
+    """The line of record: the headline, per-family sums and the
+    slowest of the suite's query timings, the scaling verdict and the
+    layer split.  The full per-query line goes right before it, since
+    the 98 query names alone outgrow the tail a reader captures."""
+    line = {k: results[k] for k in ("metric", "value", "unit", "sf", "n_docs", "kept", "docs_per_sec")}
+    line["n_queries"] = len(results["queries"])
+    line["queries"] = {"pipeline": results["queries"]["pipeline"]}
+    suite = {k: v for k, v in results["queries"].items() if k != "pipeline"}
+    families: dict[str, float] = {}
+    for name, sec in suite.items():
+        fam = family_of(name)
+        families[fam] = families.get(fam, 0.0) + sec
+    line["families"] = {fam: round(sec, 3) for fam, sec in sorted(families.items(), key=lambda kv: -kv[1])}
+    line["slowest"] = dict(sorted(suite.items(), key=lambda kv: -kv[1])[:N_SLOWEST])
+    line["layers"] = results["layers"]
+    if "scaling" in results:
+        s = results["scaling"]
+        line["scaling"] = {
+            k: s[k]
+            for k in s
+            if k.startswith(("docs_per_sec_", "efficiency"))
+            or k in ("scaling_bar_met", "host_contended", "skipped")
+        }
+    return json.dumps(line)
+
+
+def time_queries(names: list[str]) -> None:
+    """Print best-of-2 seconds for each named query, timed exactly as
+    the full run times the suite."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries {unknown}; names are the keys of __spark_entry__.queries()")
+    spark = make_spark(app="bench-queries")
+    print(json.dumps(run_query_suite(spark, {n: qs[n] for n in names})))
+    spark.stop()
+
+
+def main():
+    import __spark_entry__ as entry
+
+    spark = make_spark(app="bench-main")
     # warm up JVM/Arrow paths once so the measured run is steady-state;
     # best-of-2 because this host shows heavy CPU-steal variance
     run_pipeline(spark, 2_000)
     t_main, kept = run_pipeline(spark, N_DOCS)
     t2, _ = run_pipeline(spark, N_DOCS)
     t_main = min(t_main, t2)
-    queries = run_query_suite(spark)
+    corpus_dir = corpus_parquet(spark, N_DOCS)
+    prefix = prefix_times(spark, corpus_dir)
+    queries = run_query_suite(spark, entry.queries())
     levels = scaling_levels() if RUN_SCALING else {}
     if levels:
         # materialize both scaling corpora at full parallelism so the
@@ -141,6 +267,7 @@ def main():
         corpus_parquet(spark, N_DOCS * 4)
         corpus_parquet(spark, N_DOCS * 16)
     spark.stop()
+    kernel = kernel_times(corpus_dir, N_DOCS)
 
     docs_per_sec_main = N_DOCS / t_main
     results = {
@@ -152,6 +279,7 @@ def main():
         "kept": int(kept),
         "docs_per_sec": round(docs_per_sec_main, 1),
         "queries": {"pipeline": round(t_main, 3), **queries},
+        "layers": layers_block(prefix, t_main, kernel),
     }
 
     if RUN_SCALING and not levels:
@@ -261,32 +389,7 @@ def main():
         }
 
     print(json.dumps(results))
-    # The driver's tail capture parses the LAST stdout line; the full
-    # line above (80 query timings) outgrew it in round 4 (BENCH_r04
-    # "parsed": null — VERDICT r4 #2).  Emit a short headline-only
-    # summary line last so the artifact of record always carries the
-    # pipeline number and the scaling verdict; the full line stays
-    # right before it for humans and BASELINE.md.
-    headline = {
-        "metric": results["metric"],
-        "value": results["value"],
-        "unit": results["unit"],
-        "sf": results["sf"],
-        "n_docs": results["n_docs"],
-        "kept": results["kept"],
-        "docs_per_sec": results["docs_per_sec"],
-        "n_queries": len(results["queries"]),
-        "queries": {"pipeline": results["queries"]["pipeline"]},
-    }
-    if "scaling" in results:
-        s = results["scaling"]
-        headline["scaling"] = {
-            k: s[k]
-            for k in s
-            if k.startswith(("docs_per_sec_", "efficiency"))
-            or k in ("scaling_bar_met", "host_contended", "skipped")
-        }
-    print(json.dumps(headline))
+    print(last_line(results))
 
 
 def _effective_cores(seconds: float = 3.0) -> float:
@@ -315,10 +418,7 @@ def scaling_levels() -> dict[int, str]:
     vs n of the usable cpus, capped at 4 vs 16 (the pair a 32-cpu host
     always used), each on the HIGHEST usable cpus — other tenants favor
     the low ones.  Empty when there are not two levels (< 4 cpus)."""
-    try:
-        cpus = sorted(os.sched_getaffinity(0))
-    except AttributeError:  # not Linux
-        cpus = list(range(os.cpu_count() or 1))
+    cpus = usable_cpus()
     n_small, n_big = min(len(cpus) // 4, 4), min(len(cpus), 16)
     if n_small < 1:
         return {}
@@ -386,7 +486,6 @@ def kernel_child_main(cores: int, n_docs: int = 0) -> None:
 def child_main(cores: int) -> None:
     n_docs = int(os.environ.get("BENCH_CHILD_DOCS", str(N_DOCS)))
     s = make_spark(cores, f"bench-scale-{cores}")
-    s.sparkContext.setLogLevel("ERROR")
     run_pipeline(s, 2_000)  # warmup
     dt, _ = run_pipeline(s, n_docs)
     dt2, _ = run_pipeline(s, n_docs)
@@ -399,5 +498,7 @@ if __name__ == "__main__":
         kernel_child_main(int(os.environ["BENCH_KERNEL_CHILD"]))
     elif os.environ.get("BENCH_CHILD"):
         child_main(int(os.environ["BENCH_CHILD"]))
+    elif sys.argv[1:]:
+        time_queries(sys.argv[1:])
     else:
         main()

@@ -49,7 +49,6 @@ REPAIR_SCHEMA = StructType(
         # payload (fence extraction carries the replaced span); project
         # it only where per-fix diffs are consumed
         StructField("repairs", ArrayType(REPAIR_ACTION_SCHEMA)),
-        StructField("error", StringType()),
         # perplexity rides in the same struct: one Arrow hop for all
         # Python-side work instead of two UDF stages (two extra python
         # worker pools oversubscribe the host at high core counts)
@@ -91,7 +90,6 @@ def make_repair_udf(with_repairs: bool = False):
             "n_repairs": [0] * n,
             "layer_hits": [None] * n,
             "actions": [None] * n,
-            "error": [None] * n,
         }
         if with_repairs:
             out["repairs"] = [None] * n
@@ -102,7 +100,6 @@ def make_repair_udf(with_repairs: bool = False):
             out["ok"][i] = r.ok
             out["fast_path"][i] = r.fast_path
             out["repaired"][i] = r.repaired
-            out["error"][i] = r.error
             if r.repairs:
                 out["n_repairs"][i] = len(r.repairs)
                 hits: dict[str, int] = {}

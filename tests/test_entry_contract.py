@@ -56,6 +56,24 @@ def test_oracle_sql_is_wellformed_duckdb():
         con.sql(f"EXPLAIN {sql}")
 
 
+def test_every_export_glob_has_a_placeholder_schema():
+    """Each tempdir parquet glob an oracle reads must have an
+    EXPORT_SCHEMAS entry; otherwise EXPLAIN-only consumers work only
+    after the query that writes the export has run on the host."""
+    import re
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    globs = {
+        path
+        for sql in entry.oracle_sql().values()
+        for path in re.findall(r"read_parquet\('([^']+)/\*\.parquet'\)", sql)
+        if path.startswith(tmp)
+    }
+    assert globs, "no export-oracle globs found"
+    assert globs - set(entry.EXPORT_SCHEMAS) == set()
+
+
 # Library defs that no query, job, tool or benchmark reaches, each kept
 # for a stated reason.  A name earns its place here or gets a caller.
 _ORPHAN_ALLOWLIST = {

@@ -41,6 +41,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import make_spark  # noqa: E402
+
 TMP = "/tmp/jrs_ann"
 N_QUERIES = 100
 K = 10
@@ -49,21 +51,6 @@ LABELS = 64
 PROBE_FRACTION = 16  # batch regime: probes = cells // PROBE_FRACTION
 POINT_QUERIES = 8    # point regime: few lookups, constant nprobe
 POINT_NPROBE = 32
-
-
-def get_spark():
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ann-rehearsal")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def ensure_vectors(spark, n: int) -> tuple:
@@ -352,7 +339,7 @@ def main():
     )
     args = ap.parse_args()
     os.makedirs(TMP, exist_ok=True)
-    spark = get_spark()
+    spark = make_spark(app="ann-rehearsal")
 
     if args.pq_only:
         for n in (args.small, args.big):

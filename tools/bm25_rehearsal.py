@@ -37,26 +37,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
+from bench import make_spark  # noqa: E402
 from sf1_rehearsal import ensure_corpus  # noqa: E402 (shared corpus cache)
 
 TMP = "/tmp/jrs_bm25_rehearsal"
 N_BUCKETS = 64
 K = 10
-
-
-def get_spark():
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("bm25-rehearsal")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def _du(path: str) -> int:
@@ -152,7 +138,7 @@ def main():
     ap.add_argument("--big", type=int, default=2_000_000)
     args = ap.parse_args()
     os.makedirs(TMP, exist_ok=True)
-    spark = get_spark()
+    spark = make_spark(app="bm25-rehearsal")
 
     out = {}
     for n in (args.small, args.big):

@@ -7,7 +7,7 @@ in-sandbox rendition of the rule's "N and 4N executors" criterion
 (the round brief: evidence it by running the same job at two
 parallelism levels on the same input).  Default N=4 (4 vs 16): the
 host is multi-tenant and delivers ~18-25 effective cores of 32, so
-a local[32] level measures the box's steal, not the engine — see
+a 32-thread level measures the box's steal, not the engine — see
 --small's help and BASELINE.md's round-6 job-scaling section.
 
 Complements bench.py, which measures the pipeline QUERY with weak
@@ -35,6 +35,9 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+from bench import _kernel_child, corpus_parquet, make_spark  # noqa: E402
+from tools.make_dist import build  # noqa: E402
 
 SANE_CEILING = 0.70
 BAR = 0.80
@@ -81,21 +84,17 @@ def main() -> None:
         default=4,
         help="N; the drill runs N vs 4N cores. Default 4 vs 16: this "
         "multi-tenant box delivers ~18-25 effective cores of 32, so "
-        "local[32] measures the host's steal, not the engine (profiled: "
+        "32 threads measure the host's steal, not the engine (profiled: "
         "per-bucket rate at 32 threads equals the known pipeline rate, "
         "the 8-thread side runs at a better-than-quarter per-core rate).",
     )
     args = ap.parse_args()
 
-    from bench import _kernel_child, corpus_parquet, make_spark
-
     # materialize the shared input at full parallelism, then release
     # the JVM before any measured run
-    spark = make_spark(32, "jrs.job_scaling_setup")
+    spark = make_spark(app="jrs.job_scaling_setup")
     inp = corpus_parquet(spark, args.docs)
     spark.stop()
-
-    from tools.make_dist import build
 
     zip_path = build()
     assert os.path.exists(zip_path)

@@ -32,6 +32,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import make_spark  # noqa: E402
+
 TMP = "/tmp/jrs_rehearsal"
 
 
@@ -40,18 +42,9 @@ def ensure_corpus(n_docs: int) -> str:
     path = os.path.join(TMP, f"corpus_{n_docs}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    from pyspark.sql import SparkSession
-
     from json_remedy_spark.sources.webpages import synthesize_corpus
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName(f"rehearsal-gen-{n_docs}")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_spark(app=f"rehearsal-gen-{n_docs}")
     docs, _ = synthesize_corpus(spark, n_docs, partitions=256)
     docs.write.mode("overwrite").parquet(path)
     # eval slice for the decontamination stage (deterministic ~0.1%)

@@ -10,19 +10,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+
+    from bench import make_spark
 
     from json_remedy_spark.operators.pipeline import quality_filter
     from json_remedy_spark.plans.explain import arrow_hops, codegen_subtrees, formatted, scan_info
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_spark(app="snapshot-plans")
 
     sections = []
 
